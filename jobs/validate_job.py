@@ -490,11 +490,12 @@ def main() -> int:
             dim = spark.read.parquet(args.ref_dim)
             if args.ref_scaled:
                 # the scaled path must never broadcast the dim, so it
-                # cannot ride the fused (broadcast-join) scan
-                n_ref = agg.referential_check_scaled(
+                # cannot ride the fused (broadcast-join) scan; its screen
+                # already holds the missing-row count
+                n_ref = agg.referential_screen_scaled(
                     df, dim, args.ref_column,
-                    id_column=suite.id_column).count()
-                report["ref_missing_rows"] = int(n_ref)
+                    id_column=suite.id_column).missing_rows
+                report["ref_missing_rows"] = n_ref
                 report["ref_pass"] = n_ref == 0
                 agg_pass &= n_ref == 0
             else:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from schemasaurus_spark.compiler import VIOLATIONS_COL
 from schemasaurus_spark.dsl import Suite
 from schemasaurus_spark.operators import aggregates as agg
+from schemasaurus_spark.session import local_frame
 from schemasaurus_spark.validate import ValidationResult, validate
 
 VIOLATION_COLS = ["doc_id", "constraint_id", "column", "value", "arg", "message"]
@@ -82,16 +83,12 @@ class AggregateChecks:
 class FullValidationResult:
     row: ValidationResult
     agg_violations: DataFrame  # stacked aggregate-check violations
+    # row count of agg_violations, summed at build time from the counts
+    # each family already holds on the driver (screen stats, fused-pass
+    # miss count, local rows) — counting the stack would re-run the
+    # uniqueness shuffles and the referential offender scan
+    n_agg: int
     drift: list = field(default_factory=list)
-    _n_agg: Optional[int] = field(default=None, init=False, repr=False)
-
-    def _agg_count(self) -> int:
-        """Count aggregate violations once per result object — verdicts()
-        and is_valid() are often both called on the same run, and the
-        aggregate stack re-executes its whole plan per action otherwise."""
-        if self._n_agg is None:
-            self._n_agg = self.agg_violations.count()
-        return self._n_agg
 
     def violations(self) -> DataFrame:
         """Row-level + aggregate violations, one schema."""
@@ -106,28 +103,14 @@ class FullValidationResult:
         pseudo-partition rows (partition_id = -1 per family) so a partition
         table consumer sees the whole-table checks too."""
         base = self.row.verdicts()
-        spark = base.sparkSession
-        n_agg = self._agg_count()
-        extra = spark.createDataFrame(
-            [(-1, 0, n_agg, n_agg == 0)],
+        extra = local_frame(
+            base.sparkSession, [(-1, 0, self.n_agg, self.n_agg == 0)],
             "partition_id int, n_rows long, n_violations long, pass boolean",
         )
         return base.unionByName(extra)
 
     def is_valid(self) -> bool:
-        if not self.row.is_valid():
-            return False
-        # populate the shared count cache: the natural gate-then-report
-        # order (is_valid() then verdicts()) must execute the aggregate
-        # plan once, not twice. The frame is per-check-sized (never data-
-        # sized), so count() over take(1) costs nothing material.
-        return self._agg_count() == 0
-
-
-def _empty_violations_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [], "doc_id string, constraint_id string, column string, "
-            "value string, arg string, message string")
+        return self.row.is_valid() and self.n_agg == 0
 
 
 def run_full_validation(df: DataFrame, suite: Suite,
@@ -138,8 +121,9 @@ def run_full_validation(df: DataFrame, suite: Suite,
     and the referential miss count — is ONE fused grouped-aggregation scan
     (``fused_aggregate_pass``); uniqueness is a second scan (its grouping
     key is the row key, not a dimension — unfusable by shape). All
-    aggregate violation frames are then driver-built LocalTableScans, so
-    consuming ``agg_violations`` re-reads NOTHING. The only extra scans
+    aggregate violation frames are then driver-built ``local_frame``
+    LocalRelations, so consuming ``agg_violations`` re-reads NOTHING and
+    runs no Python-worker task. The only extra scans
     ever taken are targeted offender extractions on DIRTY tables
     (referential row listing, duplicate-key listing) —
     tests/test_scan_budget.py pins the 2-scan budget."""
@@ -191,9 +175,12 @@ def run_full_validation(df: DataFrame, suite: Suite,
             "empty — the frozen bucket edges are required to compare "
             "against the checkpointed baseline")
 
-    parts: list[DataFrame] = []
+    # (violations frame, its row count as known on the driver)
+    parts: list[tuple[DataFrame, int]] = []
     if unique_key:
-        parts.append(agg.uniqueness_check(df, unique_key).violations)
+        u = agg.uniqueness_check(df, unique_key)
+        # one violation per occurrence beyond each key's first
+        parts.append((u.violations, u.screen_total - u.screen_distinct))
 
     # ONE fused scan for null-rate + drift + referential-miss-count.
     null_rate_max = checks.null_rate_max or {}
@@ -209,9 +196,10 @@ def run_full_validation(df: DataFrame, suite: Suite,
                   or checks.drift_baseline is not None)
     drift_results = []
     if checks.sources_dim is not None and checks.ref_scaled:
-        parts.append(agg.referential_check_scaled(
+        r = agg.referential_screen_scaled(
             df, checks.sources_dim, checks.ref_column,
-            id_column=suite.id_column))
+            id_column=suite.id_column)
+        parts.append((r.violations, r.missing_rows))
     if need_fused:
         fused = agg.fused_aggregate_pass(
             df,
@@ -226,18 +214,25 @@ def run_full_validation(df: DataFrame, suite: Suite,
             drift_is_array=checks.drift_is_array,
             stat_bound_cols=list(stat_bounds),
         )
-        if fused_dim is not None and fused.ref_missing_total() > 0:
+        n_ref = fused.ref_missing_total()
+        if fused_dim is not None and n_ref > 0:
             # dirty path only: a targeted anti-join lists the offending
             # rows; the clean path never takes this scan
-            parts.append(agg.referential_check(
+            parts.append((agg.referential_check(
                 df, checks.sources_dim, checks.ref_column,
-                id_column=suite.id_column))
+                id_column=suite.id_column), n_ref))
+        # the local families' counts re-derive their offender rows from
+        # the same collected stats (group-sized, pure Python, no action)
         if null_rate_max:
-            parts.append(agg.null_rate_violations_from_stats(
-                spark, fused, null_rate_max))
+            parts.append((
+                agg.null_rate_violations_from_stats(spark, fused,
+                                                    null_rate_max),
+                len(agg.null_rate_offenders(fused, null_rate_max))))
         if stat_bounds:
-            parts.append(agg.stat_bound_violations_from_stats(
-                spark, fused, stat_bounds))
+            parts.append((
+                agg.stat_bound_violations_from_stats(spark, fused,
+                                                     stat_bounds),
+                len(agg.stat_bound_offenders(fused, stat_bounds))))
         if checks.drift_baseline is not None:
             n = len(checks.drift_edges) - 1
             drift_results = agg.drift_from_counts(
@@ -245,11 +240,15 @@ def run_full_validation(df: DataFrame, suite: Suite,
                 agg.hist_rows_to_map(checks.drift_baseline.collect()),
                 n, checks.drift_column,
                 checks.psi_threshold, checks.ks_threshold)
-            parts.append(agg.drift_violations(
-                spark, drift_results, checks.psi_threshold,
-                checks.ks_threshold))
+            parts.append((
+                agg.drift_violations(spark, drift_results,
+                                     checks.psi_threshold,
+                                     checks.ks_threshold),
+                len(agg.drift_offenders(drift_results, checks.psi_threshold,
+                                        checks.ks_threshold))))
 
-    stacked = _empty_violations_df(spark)
-    for p in parts:
+    stacked = local_frame(spark, [], agg.VIOLATIONS_DDL)
+    for p, _ in parts:
         stacked = stacked.unionByName(p.select(*VIOLATION_COLS))
-    return FullValidationResult(row_res, stacked, drift_results)
+    return FullValidationResult(row_res, stacked,
+                                sum(n for _, n in parts), drift_results)

@@ -39,6 +39,11 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from schemasaurus_spark.messages import render_message
+from schemasaurus_spark.session import local_frame
+
+# the shared violation schema every check family emits
+VIOLATIONS_DDL = ("doc_id string, constraint_id string, column string, "
+                  "value string, arg string, message string")
 
 
 # ----------------------------------------------------------------- stats
@@ -213,7 +218,8 @@ def fused_aggregate_pass(
     collect stays sketch-sized at any input scale.
 
     Returns collected driver-side stats; violation frames are built from
-    them with ``createDataFrame`` (LocalTableScan — no second scan).
+    them with :func:`~schemasaurus_spark.session.local_frame` (an Arrow
+    LocalRelation — no second scan, no Python-worker task).
     """
     n = max(len(edges) - 1, 0)
     work = df
@@ -287,6 +293,22 @@ def fused_aggregate_pass(
                          dim is not None, list(stat_bound_cols))
 
 
+def null_rate_offenders(fused: FusedAggStats,
+                        null_rate_max: dict[str, float]) -> list[tuple]:
+    """(group_key, column, null_rate, arg, message) per offending group —
+    one tuple per `stats.null_rate` violation row."""
+    rows = []
+    for gk, (n_rows, nulls) in fused.null_stats().items():
+        for c, max_rate in null_rate_max.items():
+            rate = (nulls[c] / n_rows) if n_rows else 0.0
+            if rate > max_rate:
+                rows.append(
+                    (None if gk is None else str(gk), c, float(rate),
+                     str(max_rate),
+                     render_message("stats.null_rate", max_rate)))
+    return rows
+
+
 def null_rate_violations_from_stats(spark, fused: FusedAggStats,
                                     null_rate_max: dict[str, float]
                                     ) -> DataFrame:
@@ -295,17 +317,8 @@ def null_rate_violations_from_stats(spark, fused: FusedAggStats,
     expressions as :func:`null_rate_check` (round → cast string on a
     double column) so the output is byte-identical to the per-column-scan
     path."""
-    offender_rows = []
-    for gk, (n_rows, nulls) in fused.null_stats().items():
-        for c, max_rate in null_rate_max.items():
-            rate = (nulls[c] / n_rows) if n_rows else 0.0
-            if rate > max_rate:
-                offender_rows.append(
-                    (None if gk is None else str(gk), c, float(rate),
-                     str(max_rate),
-                     render_message("stats.null_rate", max_rate)))
-    tiny = spark.createDataFrame(
-        offender_rows,
+    tiny = local_frame(
+        spark, null_rate_offenders(fused, null_rate_max),
         "group_key string, column string, null_rate double, "
         "arg string, message string")
     return tiny.select(
@@ -317,16 +330,11 @@ def null_rate_violations_from_stats(spark, fused: FusedAggStats,
     )
 
 
-def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
-                                     stat_bounds: dict) -> DataFrame:
-    """Driver-built Deequ-style aggregate assertions from the fused pass
-    (LocalTableScan only — no second scan). ``stat_bounds`` maps column ->
-    spec with any of ``min_mean`` / ``max_mean`` (per-group mean bounds;
-    code ``stats.mean_bound``) and ``min_value`` / ``max_value`` (hard
-    bounds on the group's observed min/max; code ``stats.value_bound``).
-    A group whose column is entirely NULL has no mean and no observed
-    min/max — it emits nothing (null PRESENCE belongs to null_rate/
-    NotNull, the engine-wide convention)."""
+def stat_bound_offenders(fused: FusedAggStats, stat_bounds: dict
+                         ) -> list[tuple]:
+    """(group_key, constraint_id, column, observed, arg, message) per
+    failed bound — one tuple per stat-bound violation row. ``stat_bounds``
+    maps column -> spec (see :func:`stat_bound_violations_from_stats`)."""
     known = {"min_mean", "max_mean", "min_value", "max_value"}
     for c, spec in stat_bounds.items():
         bad = set(spec) - known
@@ -358,9 +366,23 @@ def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
             if mx is not None and "max_value" in spec and mx > spec["max_value"]:
                 _emit(gk, "stats.value_bound", c, mx,
                       "max_value", spec["max_value"])
-    tiny = spark.createDataFrame(
-        rows, "group_key string, constraint_id string, column string, "
-              "observed double, arg string, message string")
+    return rows
+
+
+def stat_bound_violations_from_stats(spark, fused: FusedAggStats,
+                                     stat_bounds: dict) -> DataFrame:
+    """Driver-built Deequ-style aggregate assertions from the fused pass
+    (LocalTableScan only — no second scan). ``stat_bounds`` maps column ->
+    spec with any of ``min_mean`` / ``max_mean`` (per-group mean bounds;
+    code ``stats.mean_bound``) and ``min_value`` / ``max_value`` (hard
+    bounds on the group's observed min/max; code ``stats.value_bound``).
+    A group whose column is entirely NULL has no mean and no observed
+    min/max — it emits nothing (null PRESENCE belongs to null_rate/
+    NotNull, the engine-wide convention)."""
+    tiny = local_frame(
+        spark, stat_bound_offenders(fused, stat_bounds),
+        "group_key string, constraint_id string, column string, "
+        "observed double, arg string, message string")
     return tiny.select(
         F.col("group_key").alias("doc_id"),
         "constraint_id", "column",
@@ -444,11 +466,8 @@ def uniqueness_check(
     clean = int(screen["max_occ"]) <= 1
 
     if clean:
-        empty = spark.createDataFrame(
-            [],
-            "doc_id string, constraint_id string, column string, value string, arg string, message string",
-        )
-        return UniquenessResult(total, distinct, True, empty)
+        return UniquenessResult(total, distinct, True,
+                                local_frame(spark, [], VIOLATIONS_DDL))
 
     dup_keys = per_key.where(F.col("occurrences") > 1)
     k_display = F.concat_ws("|", *[F.col(kc).cast("string") for kc in keys])
@@ -541,6 +560,13 @@ def referential_check(
     )
 
 
+@dataclass
+class ScaledReferentialResult:
+    missing_keys: int
+    missing_rows: int  # = the violation row count, known without a re-scan
+    violations: DataFrame  # empty if missing_keys == 0
+
+
 def referential_check_scaled(
     df: DataFrame,
     dim: DataFrame,
@@ -549,6 +575,19 @@ def referential_check_scaled(
     id_column: str = "doc_id",
     max_missing_keys: int = 100_000,
 ) -> DataFrame:
+    """Violations frame of :func:`referential_screen_scaled`."""
+    return referential_screen_scaled(df, dim, column, dim_column, id_column,
+                                     max_missing_keys).violations
+
+
+def referential_screen_scaled(
+    df: DataFrame,
+    dim: DataFrame,
+    column: str = "source",
+    dim_column: str | None = None,
+    id_column: str = "doc_id",
+    max_missing_keys: int = 100_000,
+) -> ScaledReferentialResult:
     """Exact referential check for dimensions too LARGE to broadcast —
     a doc-id-like FK whose dimension is another 10^12-row table's key
     column. Same error shape/code as :func:`referential_check`
@@ -583,22 +622,21 @@ def referential_check_scaled(
         F.count(F.lit(1)).alias("k"),
         F.coalesce(F.sum("__n"), F.lit(0)).alias("rows"),
     ).first()
-    n_missing_keys = int(screen["k"])
+    n_missing_keys, n_missing_rows = int(screen["k"]), int(screen["rows"])
     if n_missing_keys > max_missing_keys:
         raise ValueError(
             f"referential_check_scaled: {n_missing_keys} distinct "
-            f"{column!r} keys ({int(screen['rows'])} rows) are missing from "
+            f"{column!r} keys ({n_missing_rows} rows) are missing from "
             f"dim({dim_column}) — above max_missing_keys={max_missing_keys}. "
             f"This is systematic (wrong dimension table?); refusing to "
             f"broadcast the missing-key set back for per-row attribution.")
-    msg = render_message("ref.source")
-    shape = (f"doc_id string, constraint_id string, column string, "
-             f"value string, arg string, message string")
     if n_missing_keys == 0:
-        return df.sparkSession.createDataFrame([], shape)
+        return ScaledReferentialResult(
+            0, 0, local_frame(df.sparkSession, [], VIOLATIONS_DDL))
+    msg = render_message("ref.source")
     rows = facts.join(F.broadcast(missing.select(column)),
                       on=column, how="left_semi")
-    return rows.select(
+    violations = rows.select(
         F.col(id_column).cast("string").alias("doc_id"),
         F.lit(f"ref.{column}").alias("constraint_id"),
         F.lit(column).alias("column"),
@@ -606,6 +644,7 @@ def referential_check_scaled(
         F.lit(f"dim({dim_column})").alias("arg"),
         F.lit(msg).alias("message"),
     )
+    return ScaledReferentialResult(n_missing_keys, n_missing_rows, violations)
 
 
 # ------------------------------------------------------------------ drift
@@ -775,8 +814,10 @@ def drift_from_counts(curm: dict, basem: dict, n_buckets: int, column: str,
     return results
 
 
-def drift_violations(spark, results: list[DriftResult], psi_threshold: float,
-                     ks_threshold: float) -> DataFrame:
+def drift_offenders(results: list[DriftResult], psi_threshold: float,
+                    ks_threshold: float) -> list[tuple]:
+    """One violation tuple per failed PSI / KS threshold, in the shared
+    violation schema."""
     rows = []
     for r in results:
         if r.psi > psi_threshold:
@@ -787,10 +828,14 @@ def drift_violations(spark, results: list[DriftResult], psi_threshold: float,
             rows.append((r.group_key, f"drift.ks.{r.metric}", r.metric,
                          f"{r.ks:.6f}", str(ks_threshold),
                          render_message("drift.ks", ks_threshold)))
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, constraint_id string, column string, value string, arg string, message string",
-    )
+    return rows
+
+
+def drift_violations(spark, results: list[DriftResult], psi_threshold: float,
+                     ks_threshold: float) -> DataFrame:
+    return local_frame(
+        spark, drift_offenders(results, psi_threshold, ks_threshold),
+        VIOLATIONS_DDL)
 
 
 # ------------------------------------------------- embedding drift

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from schemasaurus_spark.operators import spread_scan
+from schemasaurus_spark.session import local_frame
 
 WORD_SPLIT = r"\s+"
 
@@ -185,8 +186,8 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
         # empty corpus (e.g. an empty incremental delta): sum() aggregates
         # to NULL and every downstream float(total) would TypeError —
         # return the well-typed empty result instead
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, logprob double")
+        return local_frame(df.sparkSession, [],
+                           f"{id_col} long, logprob double")
     if max_vocab is not None:
         # top-K by (n desc, word asc) runs as TakeOrderedAndProject and is
         # COLLECTED (K rows, driver-bounded by the user's own valve): the

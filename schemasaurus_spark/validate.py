@@ -28,6 +28,7 @@ from schemasaurus_spark.compiler import (
     compile_suite,
 )
 from schemasaurus_spark.dsl import Suite
+from schemasaurus_spark.session import local_frame
 
 
 @dataclass
@@ -68,13 +69,12 @@ class ValidationResult:
             # (doc_id null), not per row — documented divergence.
             from schemasaurus_spark.messages import render_message
 
-            spark = self.validated.sparkSession
             msg = render_message("additionalProperties",
                                  overrides=self.plan.suite.messages)
             rows = [(None, "additionalProperties", c, None, None, msg, 0)
                     for c in extra]
-            schema_cols = out.schema
-            out = out.unionByName(spark.createDataFrame(rows, schema_cols))
+            out = out.unionByName(
+                local_frame(self.validated.sparkSession, rows, out.schema))
         return out
 
     def undeclared_columns(self) -> list[str]:
@@ -115,9 +115,8 @@ class ValidationResult:
         extra = self.undeclared_columns()
         if not extra:
             return base
-        spark = self.validated.sparkSession
-        pseudo = spark.createDataFrame(
-            [(-2, 0, len(extra), False)],
+        pseudo = local_frame(
+            self.validated.sparkSession, [(-2, 0, len(extra), False)],
             "partition_id int, n_rows long, n_violations long, pass boolean")
         return base.unionByName(pseudo)
 
@@ -136,8 +135,8 @@ class ValidationResult:
         extra = self.undeclared_columns()
         if not extra:
             return base
-        spark = self.validated.sparkSession
-        static = spark.createDataFrame(
+        static = local_frame(
+            self.validated.sparkSession,
             [("additionalProperties", c, 1) for c in extra],
             "constraint_id string, column string, n_violations long")
         return base.unionByName(static)
@@ -296,14 +295,14 @@ def make_value_validator(spark, suite: Suite, schema: str):
     (code, message, value, arg, path=[column]).
 
     This is a convenience for parity/tests and small interactive checks —
-    it round-trips one row through a local DataFrame, so it is NOT the
+    it round-trips one row through a ``local_frame``, so it is NOT the
     scale path (tables go through :func:`validate`)."""
     t = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
     plan = compile_suite(suite, t)
 
     def validator(value: dict) -> dict:
         row = tuple(value.get(f.name) for f in t.fields)
-        df = spark.createDataFrame([row], t)
+        df = local_frame(spark, [row], t)
         rows = ValidationResult(plan, plan.apply(df)).violations().collect()
         errors = [
             {"code": r["constraint_id"], "message": r["message"],

@@ -1,6 +1,7 @@
 """Full-engine facade + salted aggregation tests."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from schemasaurus_spark import Enum, Minimum, NotNull, Pattern, Suite
 from schemasaurus_spark import datagen
@@ -164,3 +165,37 @@ def test_full_validation_misconfig_is_loud(spark):
         stat_bounds={"x": {"max_mean": 10.0}}, null_rate_max={"x": 0.5},
         null_rate_by=None))
     assert res.is_valid()
+
+
+@pytest.mark.parametrize("ref_scaled", [False, True])
+def test_agg_count_matches_the_stack_without_recounting(spark, ref_scaled):
+    """n_agg is summed from what each family already holds on the driver
+    (uniqueness screen, referential miss count, local rows) — it must
+    equal a real count of the stacked violations with EVERY family
+    firing."""
+    df = datagen.gen_sequences(spark, 600, 4)
+    for corrupt in (datagen.corrupt_null_docid, datagen.corrupt_dup_docid,
+                    datagen.corrupt_ref_source):
+        df = corrupt(df, every=20)
+    df = datagen.finalize(df)
+    edges = [0.0, 8, 16, 32, 64, 128, 256, 512]
+    shifted = df.withColumn("n_tok", F.least(F.col("n_tok") * 4, F.lit(512)))
+    baseline = spark.createDataFrame(
+        [tuple(r) for r in agg.histogram(shifted, "n_tok", edges,
+                                         by="source").collect()],
+        "group_key string, bucket int, count long")
+    res = run_full_validation(df, _suite(), AggregateChecks(
+        sources_dim=datagen.sources_dim(spark), ref_scaled=ref_scaled,
+        null_rate_max={"doc_id": 0.01},
+        stat_bounds={"n_tok": {"max_mean": 1.0, "max_value": 100}},
+        drift_baseline=baseline, drift_edges=edges))
+    codes = {".".join(r["constraint_id"].split(".")[:2])
+             for r in res.agg_violations.collect()}
+    assert codes == {"unique.doc_id", "ref.source", "stats.null_rate",
+                     "stats.mean_bound", "stats.value_bound", "drift.psi",
+                     "drift.ks"}, codes
+    assert res.n_agg == res.agg_violations.count() > 0
+    assert not res.is_valid()
+    pseudo = [r for r in res.verdicts().collect() if r["partition_id"] == -1]
+    assert [(r["n_violations"], r["pass"]) for r in pseudo] == [
+        (res.n_agg, False)]
