@@ -1,12 +1,17 @@
-"""ConstraintCompiler — DSL → Catalyst expression plan.
+"""ConstraintCompiler — DSL → Spark SQL expression text.
 
 The Spark re-expression of the reference compiler
-(``/root/reference/src/compiler.js``): where the reference walks the schema
-once and emits specialized JavaScript source (``compiler.js:135-211``), this
-compiler walks the :class:`~schemasaurus_spark.dsl.Suite` once and emits
-Catalyst ``Column`` expression trees. WholeStageCodegen then plays the role
-of ``new Function(...)`` + inlining (``compiler.js:194-211``,
-``src/int/code.js:42-57``): the per-row work is fused JVM bytecode.
+(schemasaurus ``src/compiler.js``). The reference walks the schema once
+and emits specialized JavaScript source, which ``new Function(...)`` turns
+into a closure (``compiler.js:135-211``). This compiler walks the
+:class:`~schemasaurus_spark.dsl.Suite` once and emits Spark SQL expression
+**source text** with every constraint argument folded in as a literal.
+``F.expr`` is the analog of ``new Function``: the plan turns the whole
+violation expression into a ``Column`` with ONE parse (and the row-pass
+predicate with one more), instead of one py4j round trip per Catalyst node.
+WholeStageCodegen then plays the role of the JIT + inlining
+(``compiler.js:194-211``, ``src/int/code.js:42-57``): the per-row work is
+fused JVM bytecode.
 
 Design invariants (SURVEY.md §4):
 
@@ -16,25 +21,44 @@ Design invariants (SURVEY.md §4):
   re-scan, no shuffle.
 * **Partial evaluation** — constraint args (enum sets, regexes, bounds,
   messages) are folded in as literals, the analog of the reference's
-  ``prepare``-time baking (``compiler.js:103-113``).
+  ``prepare``-time baking (``compiler.js:103-113``). Literals render with
+  the Spark types ``F.lit`` would give them (see :func:`_lit`).
 * **Compile-time dead-code elimination** — checks inapplicable to a column's
-  static type compile to nothing, the analog of the reference's type guards
-  (``typeof _ === 'string' && ...``, v4validator.js:194-206) plus its
-  unmatched-selector pruning (``compiler.js:85-101``).
+  or element's static type compile to nothing, the analog of the
+  reference's type guards (``typeof _ === 'string' && ...``,
+  v4validator.js:194-206) plus its unmatched-selector pruning
+  (``compiler.js:85-101``).
 * **Short-circuit parity** — a null value yields only the ``required`` error
   and suppresses all other checks on that column, matching
   ``ctx.stop()`` after a required failure (v4validator.js:80); emission order
   inside a row follows DSL order, matching traversal order
   (``compiler.js:156-173``).
+* **Flat emission** — AND, OR and ``concat`` chains render n-ary: a chain
+  appended to a chain of the same kind splices into one level. The SQL
+  parser rejects deeply parenthesized text (``FAILED_TO_PARSE_TOO_COMPLEX``)
+  and pays a steep cold-parse cost for lookahead, so operands are grouped
+  only where precedence requires, by a function call instead of
+  parentheses, and two-way conditionals render as ``if(c, a, b)``.
+* **Column boundary** — ``Conform.expr``/``pandas_fn`` and
+  ``dsl.register_constraint`` hooks receive and return ``Column``s. Where a
+  Column meets emitted text, each adjacent text subtree becomes a Column
+  through one ``F.expr`` and the combination continues through the
+  DataFrame API.
 * **No per-row Python** — ``Conform.pandas_fn`` is the only Python on the
   executor path and it is an Arrow-vectorized ``pandas_udf``.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
+import math
+import operator
+import re
 from dataclasses import dataclass, field as dc_field
-from typing import Optional, Sequence
+from decimal import Decimal
+from functools import cached_property, reduce
+from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -57,6 +81,14 @@ VIOLATION_STRUCT = T.StructType(
 VIOLATION_ARRAY_TYPE = T.ArrayType(VIOLATION_STRUCT)
 VIOLATIONS_COL = "__violations"
 
+# An emitted expression: Spark SQL text, or a Column once an extension hook,
+# a Conform predicate or a pandas_udf has joined the tree.
+Expr = Union[str, Column]
+
+
+class SuiteCompileError(ValueError):
+    pass
+
 
 def _render_arg(arg) -> Optional[str]:
     if arg is None:
@@ -66,76 +98,291 @@ def _render_arg(arg) -> Optional[str]:
     return str(arg)
 
 
-# Lazily-built constant Columns, cached per process (round 6): every
-# pyspark function call is a ~1ms py4j round trip, and the compiler builds
-# the SAME constant expressions (empty violation array, true/false/null
-# literals) once per fragment — hundreds of times per suite, tens of
-# thousands of times in the batched conformance/official harnesses.
-# Columns are immutable expression trees, safe to share across plans,
-# sessions and threads; lazy because F.lit needs a live gateway.
-_CONST_CACHE: dict = {}
+# --------------------------------------------------------------------------
+# SQL text rendering
 
 
-def _const(key, make) -> Column:
-    c = _CONST_CACHE.get(key)
-    if c is None:
-        if len(_CONST_CACHE) > 10_000:
-            # bound the per-process cache: keys include user-authored
-            # message/code strings, and a long-lived service compiling
-            # unbounded ad-hoc suites must not leak — past the cap just
-            # build uncached
-            return make()
-        c = _CONST_CACHE[key] = make()
-    return c
+def _sql_str(s: str) -> str:
+    """Single-quoted string literal. ``$`` goes out as the ``\\u0024``
+    escape: the session parser substitutes ``${...}`` variables in the raw
+    text before it tokenizes string literals."""
+    body = s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return "'" + body + "'"
 
 
-def _lit_true() -> Column:
-    return _const("true", lambda: F.lit(True))
+def _lit(v) -> str:
+    """SQL literal with the Spark type ``F.lit(v)`` gives: int → INT or
+    BIGINT by range, float → DOUBLE (a bare ``1.5`` would parse as
+    DECIMAL), str → STRING, list → array, None → the NULL (void) literal."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        if -(2 ** 31) <= v < 2 ** 31:
+            return str(v)
+        if -(2 ** 63) <= v < 2 ** 63:
+            return f"{v}L"
+        raise SuiteCompileError(f"integer literal {v} is outside the int64 range")
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+        return repr(v) + "D"
+    if isinstance(v, Decimal):
+        return f"{v}BD"
+    if isinstance(v, str):
+        return _sql_str(v)
+    if isinstance(v, (list, tuple)):
+        return "array(" + ", ".join(_lit(x) for x in v) + ")"
+    raise SuiteCompileError(f"no SQL literal for {type(v).__name__} value {v!r}")
 
 
-def _lit_false() -> Column:
-    return _const("false", lambda: F.lit(False))
+def _ident(name: str) -> str:
+    """Column reference: one back-quoted part per dotted segment (the
+    nested-path reading ``F.col('a.b')`` gives), backticks doubled."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
 
 
-def _lit_null_str() -> Column:
-    return _const("null_str", lambda: F.lit(None).cast("string"))
+# Binding strength of an emitted expression's top operator, loosest first.
+# Operands are grouped only where precedence requires it, and grouped by a
+# one-argument coalesce (the identity; the optimizer's NullPropagation
+# removes it) rather than by parentheses: a parenthesized subexpression
+# makes the parser look ahead to its closing parenthesis to tell it from a
+# row constructor, a subquery or lambda parameters, and on a cold parser
+# that lookahead cost 82 MB of allocation for the 3.4 KB pass predicate of
+# a draft-4 batch, against 34 MB with the function-call grouping.
+_OR, _AND, _NOT, _CMP, _ADD, _MUL, _ATOM = range(7)
 
 
-def _vio_struct(code: str, column, value: Column, arg, message: str) -> Column:
-    # `column` is usually a static label; PatternProperties passes a Column
-    # expression so the label can carry the offending map key (col[key]).
-    # Constraint codes, column labels, messages and rendered args repeat
-    # heavily across fragments (233-case conformance batches reuse a
-    # handful of codes), so the fully-aliased literal sub-Columns are
-    # cached by value — only the `value` cast is built per call.
+class _Sql(str):
+    """SQL text tagged with the binding strength of its top operator.
+    Plain ``str`` text is an atom: a literal, a column, a function call,
+    CASE or CAST."""
+
+    prec = _ATOM
+
+
+def _sql(text: str, prec: int) -> _Sql:
+    out = _Sql(text)
+    out.prec = prec
+    return out
+
+
+def _p(e: str, prec: int) -> str:
+    """``e`` as an operand that must bind at least as tightly as ``prec``."""
+    return e if getattr(e, "prec", _ATOM) >= prec else f"coalesce({e})"
+
+
+def _bin(a: str, op: str, b: str) -> _Sql:
+    """Comparison or predicate (``<``, ``=``, ``<=>``, ``RLIKE`` …)."""
+    return _sql(f"{_p(a, _ADD)} {op} {_p(b, _ADD)}", _CMP)
+
+
+def _arith(a: str, op: str, b: str) -> _Sql:
+    """Left-associative arithmetic: ``-`` binds like ``+``, the rest like
+    ``*``."""
+    prec = _ADD if op in "+-" else _MUL
+    return _sql(f"{_p(a, prec)} {op} {_p(b, prec + 1)}", prec)
+
+
+def _field(e: str, name: str) -> str:
+    """Struct field / map-entry access — ``e[name]`` in the Column API."""
+    return f"{e}[{_sql_str(name)}]"
+
+
+_VIOLATIONS_SQL_TYPE = ("ARRAY<STRUCT<"
+                        + ", ".join(f"`{f.name}`: STRING"
+                                    for f in VIOLATION_STRUCT.fields)
+                        + ">>")
+# An empty violation array inside a fragment is the untyped `array()`: it
+# takes the struct type of its sibling branch by coercion, and at ~130 bytes
+# a piece the typed CAST was a quarter of a draft-4 batch's text. Only the
+# plan-level expression carries the full type.
+_EMPTY = "array()"
+_EMPTY_TYPED = f"CAST(array() AS {_VIOLATIONS_SQL_TYPE})"
+_NULL_STR = "CAST(NULL AS STRING)"
+_ASTRAL_RE = _sql_str(r"[\x{10000}-\x{10FFFF}]")  # utf16: astral chars count 2
+_MARK_RE = _sql_str(r"\p{M}")  # graphemes: combining marks fold away
+
+
+# --------------------------------------------------------------------------
+# expression nodes — text, or Columns at the extension boundary
+
+
+def _column(e: Expr) -> Column:
+    return e if isinstance(e, Column) else F.expr(e)
+
+
+def _op(text: Callable[..., str], build: Callable[..., Column], *args: Expr) -> Expr:
+    """One expression node over ``args``: rendered as text, or — when any
+    operand is a Column — built through the DataFrame API with each text
+    operand parsed once."""
+    if any(isinstance(a, Column) for a in args):
+        return build(*map(_column, args))
+    return text(*args)
+
+
+def _not(e: Expr) -> Expr:
+    return _op(lambda a: _sql(f"NOT {_p(a, _NOT)}", _NOT), operator.inv, e)
+
+
+def _is_null(e: Expr) -> Expr:
+    return _op(lambda a: _sql(f"{_p(a, _ADD)} IS NULL", _CMP),
+               lambda c: c.isNull(), e)
+
+
+def _not_null(e: Expr) -> Expr:
+    return _op(lambda a: _sql(f"{_p(a, _ADD)} IS NOT NULL", _CMP),
+               lambda c: c.isNotNull(), e)
+
+
+def _coalesce(e: Expr, default: str) -> Expr:
+    """``coalesce(e, default)`` of a boolean ``e`` to ``TRUE``/``FALSE``."""
+    if isinstance(e, Column):
+        # the same truth table through null-safe equality: one py4j round
+        # trip, where F.coalesce and its literal take twelve
+        return e.eqNullSafe(True) if default == "FALSE" else ~e.eqNullSafe(False)
+    return f"coalesce({e}, {default})"
+
+
+def _cast(e: Expr, sql_type: str) -> Expr:
+    return _op(lambda a: f"CAST({a} AS {sql_type})",
+               lambda c: c.cast(sql_type), e)
+
+
+def _array(e: Expr) -> Expr:
+    return _op(lambda a: f"array({a})", F.array, e)
+
+
+_CMP_OPS = {"=": operator.eq, ">": operator.gt}
+
+
+def _cmp(a: Expr, op: str, b: str) -> Expr:
+    return _op(lambda x, y: _bin(x, op, y), _CMP_OPS[op], a, b)
+
+
+def _case(branches: list, otherwise: Expr = _EMPTY) -> Expr:
+    """``CASE WHEN c1 THEN v1 … ELSE otherwise END`` (``F.when`` chain)."""
+    args = [e for pair in branches for e in pair] + [otherwise]
+
+    def text(*a):
+        if len(a) == 3:
+            # if() is a function call; `CASE WHEN` makes a cold parser look
+            # ahead through the whole condition (WHEN is also a legal
+            # identifier, so `CASE when …` could start a simple CASE)
+            return f"if({a[0]}, {a[1]}, {a[2]})"
+        whens = " ".join(f"WHEN {a[k]} THEN {a[k + 1]}"
+                         for k in range(0, len(a) - 1, 2))
+        return f"CASE {whens} ELSE {a[-1]} END"
+
+    def build(*a):
+        w = F.when(a[0], a[1])
+        for k in range(2, len(a) - 1, 2):
+            w = w.when(a[k], a[k + 1])
+        return w.otherwise(a[-1])
+
+    return _op(text, build, *args)
+
+
+def _when(cond: Expr, then: Expr, otherwise: Expr = _EMPTY) -> Expr:
+    return _case([(cond, then)], otherwise)
+
+
+class _Chain(_Sql):
+    """Rendered n-ary chain that keeps its operands, so a chain appended to
+    a chain of the same kind splices in flat instead of nesting a level."""
+
+    kind: str
+    parts: tuple
+
+
+def _chain(kind: str, parts, unit: str, render, build, prec: int) -> Expr:
+    flat: list = []
+    for p in parts:
+        if isinstance(p, _Chain) and p.kind == kind:
+            flat.extend(p.parts)
+        elif not (isinstance(p, str) and p == unit):
+            flat.append(p)
+    if not flat:
+        return unit
+    if len(flat) == 1:
+        return flat[0]
+    if any(isinstance(p, Column) for p in flat):
+        # each run of text operands between Columns parses as one subtree
+        cols: list = []
+        for is_col, run in itertools.groupby(
+                flat, key=lambda p: isinstance(p, Column)):
+            run = list(run)
+            cols.extend(run if is_col else
+                        [F.expr(_chain(kind, run, unit, render, build, prec))])
+        return build(cols)
+    out = _Chain(render([_p(p, prec) for p in flat]))
+    out.kind, out.parts, out.prec = kind, tuple(flat), prec
+    return out
+
+
+def _and(parts) -> Expr:
+    return _chain("AND", parts, "TRUE", " AND ".join,
+                  lambda cs: reduce(operator.and_, cs), _AND)
+
+
+def _or(parts) -> Expr:
+    return _chain("OR", parts, "FALSE", " OR ".join,
+                  lambda cs: reduce(operator.or_, cs), _OR)
+
+
+def _sum(parts) -> Expr:
+    return _chain("+", parts, "0", " + ".join,
+                  lambda cs: reduce(operator.add, cs), _ADD)
+
+
+def _concat(parts) -> Expr:
+    """Violation-array concatenation; empty arrays drop out."""
+    return _chain("concat", parts, _EMPTY,
+                  lambda ps: "concat(" + ", ".join(ps) + ")",
+                  lambda cs: F.concat(*cs), _ATOM)
+
+
+def _vio_struct(code: str, label: Expr, value: Expr, arg, message: str) -> Expr:
+    """One violation record. ``label`` is an expression (usually a string
+    literal; PatternProperties builds ``col[key]`` from the map key)."""
     rendered = _render_arg(arg)
-    return F.struct(
-        _const(("cid", code),
-               lambda: F.lit(code).alias("constraint_id")),
-        (column.alias("column") if isinstance(column, Column)
-         else _const(("col", column),
-                     lambda: F.lit(column).alias("column"))),
-        value.cast("string").alias("value"),
-        _const(("arg", rendered),
-               lambda: (_lit_null_str() if rendered is None
-                        else F.lit(rendered).cast("string")).alias("arg")),
-        _const(("msg", message),
-               lambda: F.lit(message).alias("message")),
-    )
 
+    def text(lb, v):
+        return (f"named_struct('constraint_id', {_sql_str(code)}, "
+                f"'column', {lb}, 'value', CAST({v} AS STRING), "
+                f"'arg', {_NULL_STR if rendered is None else _sql_str(rendered)}, "
+                f"'message', {_sql_str(message)})")
 
-def _empty_violations() -> Column:
-    return _const("empty_violations",
-                  lambda: F.lit([]).cast(VIOLATION_ARRAY_TYPE))
+    def build(lb, v):
+        return F.struct(
+            F.lit(code).alias("constraint_id"),
+            lb.alias("column"),
+            v.cast("string").alias("value"),
+            F.lit(rendered).cast("string").alias("arg"),
+            F.lit(message).alias("message"))
+
+    return _op(text, build, label, value)
 
 
 def _scalar_fragment(
-    failed: Column, code: str, column: str, value: Column, arg, message: str
-) -> Column:
-    """0-or-1-element violation array for a scalar check."""
-    return F.when(failed, F.array(_vio_struct(code, column, value, arg, message))).otherwise(
-        _empty_violations()
-    )
+    failed: Expr, code: str, column: str, value: Expr, arg, message: str
+) -> Expr:
+    """0-or-1-element violation array for a scalar check. Accepts text or
+    Columns, so ``dsl.register_constraint`` hooks can build with it."""
+    return _when(failed, _array(_vio_struct(code, _sql_str(column), value,
+                                            arg, message)))
+
+
+def _pass(x: str) -> str:
+    """Element predicate of a keyword that cannot fail on the element's
+    static type (the element-level twin of the column-level DCE)."""
+    return "TRUE"
+
+
+_pass.static_true = True
 
 
 @dataclass
@@ -143,16 +390,28 @@ class CompiledColumn:
     """All fragments for one column, in DSL order."""
 
     column: str
-    fragments: list[Column] = dc_field(default_factory=list)  # array<struct> each
-    # conjunction of all pass-predicates (used by combinator branches)
-    valid: Optional[Column] = None
+    fragments: list = dc_field(default_factory=list)  # array<struct> each
+    valids: list = dc_field(default_factory=list)  # pass predicates, AND-ed
+
+    @property
+    def valid(self) -> Optional[Expr]:
+        """Conjunction of all pass-predicates (used by combinator branches)."""
+        return _and(self.valids) if self.valids else None
+
+    @valid.setter
+    def valid(self, v: Optional[Expr]) -> None:
+        self.valids = [] if v is None else [v]
+
+    def add(self, fragment: Expr, ok: Expr) -> None:
+        self.fragments.append(fragment)
+        self.valids.append(ok)
 
 
 @dataclass
 class ValidationPlan:
     """The compiled artifact — analog of the specialized closure the
-    reference returns (``compiler.js:201-211``). Holds the single violation
-    expression; ``apply`` projects it onto a DataFrame.
+    reference returns (``compiler.js:201-211``). Holds the violation
+    expression as SQL text; ``apply`` projects it onto a DataFrame.
 
     Fast-path/slow-path split: ``row_valid`` is the conjunction of all pass
     predicates — cheap (no struct/array construction). The violation-array
@@ -161,17 +420,34 @@ class ValidationPlan:
     early-exit codegen, ``compiler.js:132`` / ``ctx.stop``)."""
 
     suite: dsl.Suite
-    fragments: list[Column]
+    fragments: list  # array<struct> expression each
     suite_hash: str
-    row_valid: Optional[Column] = None
+    valid: Optional[Expr] = None  # the row pass predicate
+
+    @property
+    def violations_sql(self) -> Expr:
+        """The whole violation-array expression (text unless an extension
+        boundary made it a Column)."""
+        if not self.fragments:
+            return _EMPTY_TYPED
+        full = _concat(self.fragments)
+        if self.valid is None:  # an extension hook that set no pass predicate
+            return _cast(full, _VIOLATIONS_SQL_TYPE)
+        # the pass predicate is a conjunction of coalesce(…, FALSE), so never
+        # NULL: `WHEN valid THEN empty` is `WHEN NOT valid THEN full` without
+        # parenthesizing the whole conjunction
+        return _when(self.valid, _EMPTY_TYPED, full)
+
+    @cached_property
+    def row_valid(self) -> Optional[Column]:
+        return None if self.valid is None else _column(self.valid)
+
+    @cached_property
+    def _violations(self) -> Column:
+        return _column(self.violations_sql)
 
     def violations_expr(self) -> Column:
-        if not self.fragments:
-            return _empty_violations()
-        full = self.fragments[0] if len(self.fragments) == 1 else F.concat(*self.fragments)
-        if self.row_valid is not None:
-            return F.when(~self.row_valid, full).otherwise(_empty_violations())
-        return full
+        return self._violations
 
     def apply(self, df: DataFrame) -> DataFrame:
         """One narrow projection: df + ``__violations`` array column."""
@@ -188,14 +464,16 @@ class ValidationPlan:
         through the projection and pushes it into the FileScan as a
         DataFilter, where it is evaluated interpreted per row — measured
         77 s vs 7 s for a 16M-row suite at 32 cores, with NEGATIVE core
-        scaling (BENCH.md round 2 'filter-pushdown pathology')."""
+        scaling (BENCH.md round 2 'filter-pushdown pathology').
+
+        A frame that already carries ``__violations`` (``apply``'s output)
+        is exploded as is: re-projecting the expression would parse and
+        analyze the whole violation text a second time."""
         cols = [F.col(self.suite.id_column), *[F.col(c) for c in extra_cols]]
-        return df.withColumn(VIOLATIONS_COL, self.violations_expr()).select(
+        if VIOLATIONS_COL not in df.columns:
+            df = df.withColumn(VIOLATIONS_COL, self.violations_expr())
+        return df.select(
             *cols, F.posexplode(VIOLATIONS_COL).alias("__pos", "__v"))
-
-
-class SuiteCompileError(ValueError):
-    pass
 
 
 # --------------------------------------------------------------------------
@@ -245,6 +523,34 @@ def _is_array(dt) -> bool:
     return dt is None or isinstance(dt, T.ArrayType)
 
 
+def _can_equal(v, dt) -> bool:
+    """Whether enum value ``v`` can equal a value of static type ``dt``.
+    JSON-mapped types follow JSON equality (``"1" != 1``, ``true != 1``);
+    other Spark types (dates, binary, …) keep Spark's own coercion."""
+    if v is None or dt is None:
+        return True
+    if isinstance(dt, T.BooleanType):
+        return isinstance(v, bool)
+    if isinstance(dt, _NUMERIC):
+        return isinstance(v, (int, float, Decimal)) and not isinstance(v, bool)
+    if isinstance(dt, T.StringType):
+        return isinstance(v, str)
+    if isinstance(dt, T.ArrayType):
+        return (isinstance(v, (list, tuple))
+                and all(_can_equal(x, dt.elementType) for x in v))
+    return not isinstance(dt, (T.StructType, T.MapType))
+
+
+def _in(x: str, values, dt) -> str:
+    """``x IN (…)`` over the enum values that can equal ``dt`` — the others
+    are dropped, not cast (a cast of an uncastable literal is a runtime
+    error under ANSI)."""
+    vals = [v for v in values if _can_equal(v, dt)]
+    if not vals:
+        return "FALSE"
+    return _sql(f"{_p(x, _ADD)} IN ({', '.join(_lit(v) for v in vals)})", _CMP)
+
+
 # --------------------------------------------------------------------------
 
 
@@ -259,6 +565,7 @@ class ConstraintCompiler:
         # cycle guards — the reference's $$visited marker (compiler.js:136-141)
         self._visiting: set[int] = set()   # nested constraint objects in flight
         self._ref_stack: set[str] = set()  # Ref names in flight
+        self._lambda_ids = itertools.count(1)
 
     # -- public -------------------------------------------------------------
 
@@ -280,21 +587,21 @@ class ConstraintCompiler:
                 raise SuiteCompileError(
                     f"suite references missing column(s) {missing}; "
                     f"available: {sorted(self.schema.fieldNames())}")
-        fragments: list[Column] = []
-        valids: list[Column] = []
+        fragments: list = []
+        valids: list = []
         for col_name, constraints in self.suite.columns.items():
             cc = self._compile_column(col_name, list(constraints))
             fragments.extend(cc.fragments)
-            if cc.valid is not None:
-                valids.append(F.coalesce(cc.valid, _lit_false()))
+            if cc.valids:
+                valids.append(_coalesce(cc.valid, "FALSE"))
         for label, constraint in self.suite.row:
-            cc = self._compile_one(label, F.col(label) if self._has(label) else F.lit(None), constraint, null_guard=False)
+            col = _ident(label) if self._has(label) else "NULL"
+            cc = self._compile_one(label, col, constraint, null_guard=False)
             fragments.extend(cc.fragments)
-            if cc.valid is not None:
-                valids.append(F.coalesce(cc.valid, _lit_false()))
-        row_valid = _and_all(valids) if valids else None
+            if cc.valids:
+                valids.append(_coalesce(cc.valid, "FALSE"))
         return ValidationPlan(self.suite, fragments, self.suite.fingerprint(),
-                              row_valid)
+                              _and(valids) if valids else None)
 
     # -- internals ----------------------------------------------------------
 
@@ -305,7 +612,16 @@ class ConstraintCompiler:
         return render_message(code, arg, overrides=self.suite.messages,
                               gettext=getattr(self.suite, "gettext", None))
 
-    def _str_len(self, col: Column) -> Column:
+    def _hof(self, fn: str, arr: str, body: Callable[..., str],
+             nargs: int = 1) -> str:
+        """Higher-order function call ``fn(arr, x -> body(x))``. Every
+        lambda gets a variable name unique within the plan, so nested
+        lambdas never shadow each other."""
+        names = [f"_lv{next(self._lambda_ids)}" for _ in range(nargs)]
+        params = names[0] if nargs == 1 else "(" + ", ".join(names) + ")"
+        return f"{fn}({arr}, {params} -> {body(*names)})"
+
+    def _str_len(self, x: str) -> str:
         """String length under the suite's strLength mode (the reference's
         pluggable strLength, v4validator.js:15-17) — all expression-only:
         codepoints = length(); utf16 = astral chars count 2 (JS
@@ -313,31 +629,27 @@ class ConstraintCompiler:
         into their base character."""
         mode = getattr(self.suite, "str_length", "codepoints")
         if mode == "codepoints":
-            return F.length(col)
+            return f"length({x})"
         if mode == "utf16":
-            return F.length(
-                F.regexp_replace(col, r"[\x{10000}-\x{10FFFF}]", "__"))
+            return f"length(regexp_replace({x}, {_ASTRAL_RE}, '__'))"
         if mode == "graphemes":
-            return F.length(F.regexp_replace(col, r"\p{M}", ""))
+            return f"length(regexp_replace({x}, {_MARK_RE}, ''))"
         raise SuiteCompileError(f"unknown str_length mode '{mode}'")
 
     def _compile_column(self, col_name: str, constraints: list[dsl.Constraint]) -> CompiledColumn:
-        col = F.col(col_name)
+        col = _ident(col_name)
         cc = CompiledColumn(col_name)
-        valids: list[Column] = []
         for c in constraints:
             # null short-circuit parity (ctx.stop(), v4validator.js:80):
             # every non-required check null-skips via its guard, so a null
             # value surfaces only `required`
             one = self._compile_one(col_name, col, c, null_guard=True)
             cc.fragments.extend(one.fragments)
-            if one.valid is not None:
-                valids.append(one.valid)
-        cc.valid = _and_all(valids)
+            cc.valids.extend(one.valids)
         return cc
 
     def _compile_one(
-        self, col_name: str, col: Column, c: dsl.Constraint, null_guard: bool
+        self, col_name: str, col: str, c: dsl.Constraint, null_guard: bool
     ) -> CompiledColumn:
         """Cycle-guarded dispatch: a combinator/Ref whose branch structure
         reaches itself would recurse forever (the reference marks visited
@@ -359,7 +671,7 @@ class ConstraintCompiler:
         return self._dispatch_one(col_name, col, c, null_guard)
 
     def _dispatch_one(
-        self, col_name: str, col: Column, c: dsl.Constraint, null_guard: bool
+        self, col_name: str, col: str, c: dsl.Constraint, null_guard: bool
     ) -> CompiledColumn:
         """Dispatch table — the analog of selector matching
         (``src/int/matchers.js:31-63``)."""
@@ -370,79 +682,87 @@ class ConstraintCompiler:
             # `failed` must be null-safe; guard converts null input → pass
             # for every non-required check (optional-absent semantics,
             # v4validator.js:67-79).
+            failed = _coalesce(failed, "TRUE")
             if null_guard:
-                failed = col.isNotNull() & F.coalesce(failed, _lit_true())
-            else:
-                failed = F.coalesce(failed, _lit_true())
+                failed = _and([_not_null(col), failed])
             msg = message or self._msg(code, arg)
-            out.fragments.append(
-                _scalar_fragment(failed, code, col_name, value if value is not None else col, arg, msg)
-            )
-            out.valid = ~failed if out.valid is None else (out.valid & ~failed)
+            out.add(_scalar_fragment(failed, code, col_name,
+                                     value if value is not None else col,
+                                     arg, msg),
+                    _not(failed))
 
         m = c.message  # per-constraint override
 
         if isinstance(c, dsl.NotNull):
-            failed = col.isNull()
+            failed = _is_null(col)
             if "." in col_name:
                 # nested required applies only when the PARENT object is
                 # present (draft-4/reference: the sub-schema is entered only
                 # for existing properties, v4validator.js:67-79 + the
                 # properties descent) — a null optional parent is silent;
                 # the parent's own NotNull governs its absence
-                parent = F.col(col_name.rsplit(".", 1)[0])
-                failed = parent.isNotNull() & failed
-            out.fragments.append(
-                _scalar_fragment(failed, "required", col_name, F.lit(None), None,
-                                 m or self._msg("required"))
-            )
-            out.valid = ~failed
+                parent = _ident(col_name.rsplit(".", 1)[0])
+                failed = _and([_not_null(parent), failed])
+            out.add(_scalar_fragment(failed, "required", col_name, "NULL", None,
+                                     m or self._msg("required")),
+                    _not(failed))
 
         elif isinstance(c, dsl.TypeIs):
             self._compile_type(out, col_name, col, c, m)
 
         elif isinstance(c, dsl.Enum):
-            emit("enum", ~col.isin(list(c.values)), arg=list(c.values), message=m)
+            emit("enum", _not(_in(col, c.values, dt)), arg=list(c.values),
+                 message=m)
 
         elif isinstance(c, dsl.Minimum):
             if _is_numeric(dt):
-                emit("minimum", col < F.lit(c.value), arg=c.value, message=m)
+                emit("minimum", _bin(col, "<", _lit(c.value)), arg=c.value, message=m)
         elif isinstance(c, dsl.ExclusiveMinimum):
             if _is_numeric(dt):
-                emit("minimum.exclusive", col <= F.lit(c.value), arg=c.value, message=m)
+                emit("minimum.exclusive", _bin(col, "<=", _lit(c.value)),
+                     arg=c.value, message=m)
         elif isinstance(c, dsl.Maximum):
             if _is_numeric(dt):
-                emit("maximum", col > F.lit(c.value), arg=c.value, message=m)
+                emit("maximum", _bin(col, ">", _lit(c.value)), arg=c.value, message=m)
         elif isinstance(c, dsl.ExclusiveMaximum):
             if _is_numeric(dt):
-                emit("maximum.exclusive", col >= F.lit(c.value), arg=c.value, message=m)
+                emit("maximum.exclusive", _bin(col, ">=", _lit(c.value)),
+                     arg=c.value, message=m)
         elif isinstance(c, dsl.MultipleOf):
             if _is_numeric(dt):
-                emit("multipleOf", (col / F.lit(float(c.value))) % 1.0 != 0.0,
+                emit("multipleOf",
+                     _bin(_arith(_arith(col, "/", _lit(float(c.value))), "%", "1.0D"),
+                          "!=", "0.0D"),
                      arg=c.value, message=m)
 
         elif isinstance(c, dsl.MinLength):
             if _is_string(dt):
-                emit("minLength", self._str_len(col) < c.value, arg=c.value, message=m)
+                emit("minLength", _bin(self._str_len(col), "<", _lit(c.value)),
+                     arg=c.value, message=m)
         elif isinstance(c, dsl.MaxLength):
             if _is_string(dt):
-                emit("maxLength", self._str_len(col) > c.value, arg=c.value, message=m)
+                emit("maxLength", _bin(self._str_len(col), ">", _lit(c.value)),
+                     arg=c.value, message=m)
         elif isinstance(c, dsl.Pattern):
             if _is_string(dt):
                 # JS .match() is an unanchored search → rlike, not full match
-                emit("pattern", ~col.rlike(c.regex), arg=c.regex, message=m)
+                emit("pattern", _not(_bin(col, "RLIKE", _sql_str(c.regex))),
+                     arg=c.regex, message=m)
         elif isinstance(c, dsl.Format):
             if _is_string(dt):
                 spec = get_format(c.name)
-                emit(f"format.{c.name}", ~col.rlike(spec.regexp),
+                emit(f"format.{c.name}",
+                     _not(_bin(col, "RLIKE", _sql_str(spec.regexp))),
                      arg=spec.message, message=m or spec.message)
 
         elif isinstance(c, dsl.MinItems):
             if _is_array(dt):
-                emit("minItems", F.size(col) < c.value, arg=c.value, message=m)
+                emit("minItems", _bin(f"size({col})", "<", _lit(c.value)),
+                     arg=c.value, message=m)
         elif isinstance(c, dsl.MaxItems):
             if _is_array(dt):
-                emit("maxItems", F.size(col) > c.value, arg=c.value, message=m)
+                emit("maxItems", _bin(f"size({col})", ">", _lit(c.value)),
+                     arg=c.value, message=m)
 
         elif isinstance(c, dsl.UniqueItems):
             if _is_array(dt):
@@ -458,11 +778,11 @@ class ConstraintCompiler:
 
         elif isinstance(c, dsl.MinProperties):
             if dt is None or isinstance(dt, T.MapType):
-                emit("minProperties", F.size(F.map_keys(col)) < c.value,
+                emit("minProperties", _bin(f"size(map_keys({col}))", "<", _lit(c.value)),
                      arg=c.value, message=m)
         elif isinstance(c, dsl.MaxProperties):
             if dt is None or isinstance(dt, T.MapType):
-                emit("maxProperties", F.size(F.map_keys(col)) > c.value,
+                emit("maxProperties", _bin(f"size(map_keys({col}))", ">", _lit(c.value)),
                      arg=c.value, message=m)
 
         elif isinstance(c, dsl.KeyPattern):
@@ -486,25 +806,22 @@ class ConstraintCompiler:
             self._compile_conform(out, col_name, col, c, m, null_guard)
 
         elif isinstance(c, (dsl.AllOf, dsl.AnyOf, dsl.OneOf)):
-            self._compile_combinator(out, col_name, col, c, m, null_guard)
+            self._compile_combinator(out, col_name, col, c, m)
             if null_guard:
                 # absent (null) value skips combinator checks entirely —
                 # ctx.stop() on missing optional value (v4validator.js:67-79)
-                out.fragments = [
-                    F.when(col.isNotNull(), f).otherwise(_empty_violations())
-                    for f in out.fragments
-                ]
-                out.valid = col.isNull() | F.coalesce(out.valid, _lit_true())
+                out.fragments = [_when(_not_null(col), f)
+                                 for f in out.fragments]
+                out.valid = _or([_is_null(col), _coalesce(out.valid, "TRUE")])
 
         elif isinstance(c, dsl.Not):
             sub = self._compile_branch(col_name, c.branch)
-            failed = F.coalesce(sub.valid, _lit_true())  # branch VALID ⇒ 'not' fails
+            failed = _coalesce(sub.valid, "TRUE")  # branch VALID ⇒ 'not' fails
             if null_guard:
-                failed = col.isNotNull() & failed
-            out.fragments.append(
-                _scalar_fragment(failed, "not", col_name, col, None, m or self._msg("not"))
-            )
-            out.valid = ~failed
+                failed = _and([_not_null(col), failed])
+            out.add(_scalar_fragment(failed, "not", col_name, col, None,
+                                     m or self._msg("not")),
+                    _not(failed))
 
         elif isinstance(c, dsl.Dependency):
             self._compile_dependency(out, col_name, c, m)
@@ -523,13 +840,10 @@ class ConstraintCompiler:
             try:
                 # inline expansion: identical plan to writing the
                 # definition's constraints directly at this position
-                valids = []
                 for sub in target:
                     one = self._compile_one(col_name, col, sub, null_guard)
                     out.fragments.extend(one.fragments)
-                    if one.valid is not None:
-                        valids.append(one.valid)
-                out.valid = _and_all(valids) if valids else None
+                    out.valids.extend(one.valids)
             finally:
                 self._ref_stack.discard(c.name)
 
@@ -537,8 +851,8 @@ class ConstraintCompiler:
             ext = dsl.get_extension(type(c))
             if ext is None:
                 raise SuiteCompileError(f"Unknown constraint {type(c).__name__}")
-            # V4Validator.extend analog: plugin appends fragments itself
-            ext(self, out, col_name, col, c, m, null_guard)
+            # V4Validator.extend analog: plugin appends Column fragments
+            ext(self, out, col_name, _column(col), c, m, null_guard)
         return out
 
     # -- type ---------------------------------------------------------------
@@ -575,45 +889,40 @@ class ConstraintCompiler:
                 return None  # always runtime
             return None
 
-        def runtime_probe(tname) -> Column:
+        def runtime_probe(tname) -> str:
             if tname == "null":
-                return col.isNull()
+                return _is_null(col)
             if not c.runtime:
                 sm = static_matches(tname)
                 if sm is not None:
-                    return F.lit(sm) | col.isNull()
+                    return _or([_lit(sm), _is_null(col)])
             # cast-probe path (permissive string ingest; try_cast is ANSI-safe)
             if tname == "integer":
-                d = col.try_cast("double")
-                return col.isNull() | (d.isNotNull() & (d % 1.0 == 0.0))
+                d = f"TRY_CAST({col} AS DOUBLE)"
+                return _or([_is_null(col),
+                            _and([_not_null(d), _bin(_arith(d, "%", "1.0D"), "=", "0.0D")])])
             if tname == "number":
-                return col.isNull() | col.try_cast("double").isNotNull()
+                return _or([_is_null(col), _not_null(f"TRY_CAST({col} AS DOUBLE)")])
             if tname == "boolean":
-                return col.isNull() | F.lower(col.cast("string")).isin("true", "false")
-            if tname == "string":
+                return _or([_is_null(col),
+                            _in(f"lower(CAST({col} AS STRING))", ["true", "false"], None)])
+            if tname in ("string", "array", "object"):
                 sm = static_matches(tname)
-                return F.lit(sm if sm is not None else True) | col.isNull()
-            if tname in ("array", "object"):
-                sm = static_matches(tname)
-                return F.lit(sm if sm is not None else True) | col.isNull()
+                return _or([_lit(sm if sm is not None else True), _is_null(col)])
             raise SuiteCompileError(f"Unknown type '{tname}'")
 
         probes = [(t, runtime_probe(t)) for t in types]
-        any_ok = _or_all([p for _, p in probes])
+        ok = _coalesce(_or([p for _, p in probes]), "FALSE")
         # note: `type: null` means the value MUST be null; a null value passes
         # any type per the guard convention except when explicitly checked.
         for tname, probe in probes:
-            failed = ~F.coalesce(any_ok, _lit_false()) & ~F.coalesce(probe, _lit_false())
-            if tname == "null":
-                failed = ~F.coalesce(any_ok, _lit_false())
-            code = {"string": "string", "number": "number", "integer": "integer",
-                    "boolean": "boolean", "array": "array", "null": "null",
-                    "object": "object"}[tname]
+            failed = _not(ok)
+            if tname != "null":
+                failed = _and([failed, _not(_coalesce(probe, "FALSE"))])
             out.fragments.append(
-                _scalar_fragment(failed, code, col_name, col, None, m or self._msg(code))
-            )
-        valid = F.coalesce(any_ok, _lit_false())
-        out.valid = valid if out.valid is None else out.valid & valid
+                _scalar_fragment(failed, tname, col_name, col, None,
+                                 m or self._msg(tname)))
+        out.valids.append(ok)
 
     def _row_container_null(self, out, col_name, col, code, null_guard):
         """ROW-level (unguarded) container constraint on a NULL value: fail
@@ -625,12 +934,10 @@ class ConstraintCompiler:
         upgraded) null_guard for the body."""
         if null_guard:
             return True
-        null_failed = col.isNull()
-        msg = self._msg(code)
-        out.fragments.append(
-            _scalar_fragment(null_failed, code, col_name, col, None, msg))
-        ok = ~null_failed
-        out.valid = ok if out.valid is None else out.valid & ok
+        null_failed = _is_null(col)
+        out.add(_scalar_fragment(null_failed, code, col_name, col, None,
+                                 self._msg(code)),
+                _not(null_failed))
         return True
 
     # -- arrays ---------------------------------------------------------------
@@ -639,40 +946,34 @@ class ConstraintCompiler:
         """Intra-array duplicates, one violation per duplicate *occurrence*
         carrying the duplicated value (v4validator.js:233-246). Pass test is
         O(n) (`array_distinct` size); the O(n²) occurrence extraction runs
-        only on failing rows, guarded by `when`."""
+        only on failing rows, guarded by `CASE WHEN`."""
         null_guard = self._row_container_null(out, col_name, col, "uniqueItems", null_guard)
-        has_dup = F.size(col) != F.size(F.array_distinct(col))
+        has_dup = _bin(f"size({col})", "!=", f"size(array_distinct({col}))")
         if null_guard:
-            has_dup = col.isNotNull() & has_dup
+            has_dup = _and([_not_null(col), has_dup])
         msg = m or self._msg("uniqueItems")
         if not c.extract_occurrences:
-            out.fragments.append(
-                _scalar_fragment(has_dup, "uniqueItems", col_name, col, None, msg)
-            )
-            ok = ~has_dup
-            out.valid = ok if out.valid is None else out.valid & ok
+            out.add(_scalar_fragment(has_dup, "uniqueItems", col_name, col,
+                                     None, msg),
+                    _not(has_dup))
             return
         # element at 0-based index i is a duplicate occurrence iff it appears
-        # among the first i elements; eqNullSafe so null duplicates (which
-        # array_distinct folds, making has_dup fire) are also EXTRACTED —
-        # plain == yields NULL on null elements and silently drops them
-        dup_occurrences = F.filter(
-            col, lambda x, i: F.exists(F.slice(col, 1, i),
-                                       lambda y: y.eqNullSafe(x))
-        )
-        structs = F.transform(
-            dup_occurrences,
-            lambda x: _vio_struct("uniqueItems", col_name, x, None, msg),
-        )
-        out.fragments.append(
-            F.when(has_dup, structs).otherwise(_empty_violations())
-        )
-        ok = ~has_dup
-        out.valid = ok if out.valid is None else out.valid & ok
+        # among the first i elements; null-safe equality so null duplicates
+        # (which array_distinct folds, making has_dup fire) are also
+        # EXTRACTED — plain = yields NULL on null elements and drops them
+        dups = self._hof(
+            "filter", col,
+            lambda x, i: self._hof("exists", f"slice({col}, 1, {i})",
+                                   lambda y: _bin(y, "<=>", x)),
+            nargs=2)
+        structs = self._hof(
+            "transform", dups,
+            lambda x: _vio_struct("uniqueItems", _sql_str(col_name), x, None, msg))
+        out.add(_when(has_dup, structs), _not(has_dup))
 
     def _compile_items(self, out, col_name, col, c: dsl.Items, null_guard):
         """Element-schema constraints (processor.js:31-47): pass test via
-        `forall`; offender extraction via `filter`+`transform`, one violation
+        `exists`; offender extraction via `filter`+`transform`, one violation
         per offending element — exactly the reference's per-element error
         loop, with codes `items.<subcode>`.
 
@@ -692,52 +993,46 @@ class ConstraintCompiler:
             pred, code, arg = self._element_predicate(sub, et)
             if getattr(pred, "static_true", False):
                 continue  # provably can't fail on this element type
+
             if isinstance(sub, dsl.NotNull):
-                failed_any = F.exists(col, lambda x: x.isNull())
+                def bad(x):
+                    return _is_null(x)
+            else:
+                def bad(x):
+                    return _and([_not_null(x),
+                                 _not(_coalesce(pred(x), "FALSE"))])
+
             # range checks get specialized O(n) pass tests (array_min/max
             # beat a lambda loop in codegen, and skip nulls natively);
             # offender extraction below only runs on failing rows
-            elif isinstance(sub, dsl.Minimum):
+            if isinstance(sub, (dsl.Minimum, dsl.Maximum)):
                 # array_min/max are NULL on empty arrays and the null_guard
                 # coalesces NULL to failed — but empty arrays must PASS
                 # (reference semantics; round-1 ADVICE): gate on size>0 and
-                # coalesce these branches to False, never True.
-                failed_any = F.coalesce(
-                    (F.size(col) > 0) & (F.array_min(col) < F.lit(sub.value)),
-                    _lit_false())
-            elif isinstance(sub, dsl.Maximum):
-                failed_any = F.coalesce(
-                    (F.size(col) > 0) & (F.array_max(col) > F.lit(sub.value)),
-                    _lit_false())
+                # coalesce these branches to FALSE, never TRUE.
+                agg, cmp = (("array_min", "<") if isinstance(sub, dsl.Minimum)
+                            else ("array_max", ">"))
+                failed_any = _coalesce(
+                    _and([_bin(f"size({col})", ">", "0"),
+                          _bin(f"{agg}({col})", cmp, _lit(sub.value))]),
+                    "FALSE")
             else:
-                failed_any = F.exists(
-                    col,
-                    lambda x: x.isNotNull() & ~F.coalesce(pred(x), _lit_false()))
+                failed_any = self._hof("exists", col, bad)
             if null_guard:
-                failed_any = col.isNotNull() & F.coalesce(failed_any, _lit_true())
+                failed_any = _and([_not_null(col), _coalesce(failed_any, "TRUE")])
             msg = sub.message or self._msg(code, arg)
             full_code = f"items.{code}"
             if c.extract_offenders:
-                if isinstance(sub, dsl.NotNull):
-                    offenders = F.filter(col, lambda x: x.isNull())
-                else:
-                    offenders = F.filter(
-                        col,
-                        lambda x: x.isNotNull() & ~F.coalesce(pred(x),
-                                                              _lit_false()))
-                structs = F.transform(
-                    offenders, lambda x: _vio_struct(full_code, col_name, x, arg, msg)
-                )
-                out.fragments.append(
-                    F.when(failed_any, structs).otherwise(_empty_violations())
-                )
+                offenders = self._hof("filter", col, bad)
+                structs = self._hof(
+                    "transform", offenders,
+                    lambda x: _vio_struct(full_code, _sql_str(col_name), x, arg, msg))
+                out.add(_when(failed_any, structs), _not(failed_any))
             else:
                 # codegen-friendly: one violation per array, value = array
-                out.fragments.append(
-                    _scalar_fragment(failed_any, full_code, col_name, col, arg, msg)
-                )
-            ok = ~failed_any
-            out.valid = ok if out.valid is None else out.valid & ok
+                out.add(_scalar_fragment(failed_any, full_code, col_name, col,
+                                         arg, msg),
+                        _not(failed_any))
         self._compile_items_fields(out, col_name, col, c, null_guard)
 
     def _compile_items_fields(self, out, col_name, col, c: dsl.Items,
@@ -748,24 +1043,6 @@ class ConstraintCompiler:
         and value = the offending field value. NotNull = field required in
         every element; other checks skip null fields (column-level null
         semantics applied per element)."""
-        # closure factories throughout — a default-arg lambda reads as the
-        # (element, index) two-arg form to F.exists/filter/transform
-        # (CLAUDE.md round-1 gotcha)
-        def _failed_factory(fname, pred, is_required):
-            if is_required:
-                def f(x):
-                    return x[fname].isNull()
-            else:
-                def f(x):
-                    return x[fname].isNotNull() & ~F.coalesce(
-                        pred(x[fname]), _lit_false())
-            return f
-
-        def _vio_factory(fname, full_code, arg, msg):
-            def f(x):
-                return _vio_struct(full_code, col_name, x[fname], arg, msg)
-            return f
-
         dt = _dtype(self.schema, col_name)
         est = dt.elementType if isinstance(dt, T.ArrayType) else None
         for fname, subs in (c.field_items() if c.fields else []):
@@ -776,94 +1053,91 @@ class ConstraintCompiler:
                 pred, code, arg = self._element_predicate(sub, ftype)
                 if getattr(pred, "static_true", False):
                     continue
-                elem_failed = _failed_factory(
-                    fname, pred, isinstance(sub, dsl.NotNull))
-                failed_any = F.exists(col, elem_failed)
+
+                if isinstance(sub, dsl.NotNull):
+                    def bad(x):
+                        return _is_null(_field(x, fname))
+                else:
+                    def bad(x):
+                        fv = _field(x, fname)
+                        return _and([_not_null(fv),
+                                     _not(_coalesce(pred(fv), "FALSE"))])
+
+                failed_any = self._hof("exists", col, bad)
                 if null_guard:
-                    failed_any = col.isNotNull() & F.coalesce(
-                        failed_any, _lit_false())
+                    failed_any = _and([_not_null(col),
+                                       _coalesce(failed_any, "FALSE")])
                 msg = sub.message or self._msg(code, arg)
                 full_code = f"items.{fname}.{code}"
                 if c.extract_offenders:
-                    offenders = F.filter(col, elem_failed)
-                    structs = F.transform(
-                        offenders, _vio_factory(fname, full_code, arg, msg))
-                    out.fragments.append(
-                        F.when(failed_any, structs)
-                         .otherwise(_empty_violations()))
+                    structs = self._hof(
+                        "transform", self._hof("filter", col, bad),
+                        lambda x: _vio_struct(full_code, _sql_str(col_name),
+                                              _field(x, fname), arg, msg))
+                    out.add(_when(failed_any, structs), _not(failed_any))
                 else:
-                    out.fragments.append(_scalar_fragment(
-                        failed_any, full_code, col_name, col, arg, msg))
-                ok = ~failed_any
-                out.valid = ok if out.valid is None else out.valid & ok
+                    out.add(_scalar_fragment(failed_any, full_code, col_name,
+                                             col, arg, msg),
+                            _not(failed_any))
 
     def _compile_tuple_items(self, out, col_name, col, c: dsl.TupleItems,
                              null_guard):
         """Positional tuple items + additionalItems
-        (processor.js:54-61,113-124). Position i (1-based element_at) checks
-        specs[i]; extras beyond len(specs) each emit `additionalItems` when
-        additional=False — one violation per extra element, value = element."""
+        (processor.js:54-61,113-124). Position i (0-based, null-safe ``get``
+        — ANSI element_at throws) checks specs[i]; extras beyond len(specs)
+        each emit `additionalItems` when additional=False — one violation
+        per extra element, value = element."""
         null_guard = self._row_container_null(out, col_name, col, "items", null_guard)
         dt = _dtype(self.schema, col_name)
         et = dt.elementType if isinstance(dt, T.ArrayType) else None
         for i, spec in enumerate(c.specs):
-            elem = F.get(col, i)  # 0-based, null-safe (ANSI element_at throws)
+            elem = f"get({col}, {i})"
             for sub in spec:
                 # NO static_true skip here: tuple positions are null-strict
                 # (a null at a spec'd position fails), so even a
                 # statically-type-matching check can still fail on null —
                 # the null-aware const pred handles it
                 pred, code, arg = self._element_predicate(sub, et)
-                failed = F.size(col) > i
-                failed = failed & ~F.coalesce(pred(elem), _lit_false())
+                failed = _and([_bin(f"size({col})", ">", str(i)),
+                               _not(_coalesce(pred(elem), "FALSE"))])
                 if null_guard:
-                    failed = col.isNotNull() & failed
+                    failed = _and([_not_null(col), failed])
                 msg = sub.message or self._msg(code, arg)
-                out.fragments.append(_scalar_fragment(
-                    failed, f"items.{i}.{code}", col_name, elem, arg, msg))
-                ok = ~failed
-                out.valid = ok if out.valid is None else out.valid & ok
+                out.add(_scalar_fragment(failed, f"items.{i}.{code}", col_name,
+                                         elem, arg, msg),
+                        _not(failed))
         if c.additional is not True:
             n_spec = len(c.specs)
-            has_extra = F.size(col) > n_spec
+            has_extra = _bin(f"size({col})", ">", str(n_spec))
             if null_guard:
-                has_extra = col.isNotNull() & has_extra
-            extras = F.slice(col, n_spec + 1,
-                             F.greatest(F.size(col) - n_spec, F.lit(0)))
+                has_extra = _and([_not_null(col), has_extra])
+            extras = f"slice({col}, {n_spec + 1}, greatest(size({col}) - {n_spec}, 0))"
             if c.additional is False or c.additional == ():
                 # forbid form: one violation per extra element
                 msg = c.message or self._msg("additionalItems")
-                structs = F.transform(
-                    extras,
-                    lambda x: _vio_struct("additionalItems", col_name, x,
-                                          None, msg))
-                out.fragments.append(
-                    F.when(has_extra, structs).otherwise(_empty_violations()))
-                ok = ~has_extra
-                out.valid = ok if out.valid is None else out.valid & ok
+                structs = self._hof(
+                    "transform", extras,
+                    lambda x: _vio_struct("additionalItems", _sql_str(col_name),
+                                          x, None, msg))
+                out.add(_when(has_extra, structs), _not(has_extra))
             else:
                 # draft-4 SCHEMA form: each extra element must satisfy the
-                # sub-schema — null-strict like spec'd positions
+                # sub-schema — null-strict like spec'd positions (a null
+                # extra fails the sub-schema check)
                 for sub in self._expand_element_refs(c.additional):
                     pred, code, arg = self._element_predicate(sub, et)
                     msg = sub.message or self._msg(code, arg)
                     full_code = f"additionalItems.{code}"
-                    # null-strict, like spec'd positions: a null extra
-                    # fails the sub-schema check
-                    bad = F.filter(
-                        extras,
-                        lambda x: ~F.coalesce(pred(x), _lit_false()))
-                    structs = F.transform(
-                        bad,
-                        lambda x: _vio_struct(full_code, col_name, x,
-                                              arg, msg))
-                    any_bad = has_extra & (F.size(bad) > 0)
-                    out.fragments.append(
-                        F.when(any_bad, structs)
-                         .otherwise(_empty_violations()))
-                    ok = ~F.coalesce(any_bad, _lit_false())
-                    out.valid = (ok if out.valid is None
-                                 else out.valid & ok)
+                    bad = self._hof(
+                        "filter", extras,
+                        lambda x: _not(_coalesce(pred(x), "FALSE")))
+                    structs = self._hof(
+                        "transform", bad,
+                        lambda x: _vio_struct(full_code, _sql_str(col_name),
+                                              x, arg, msg))
+                    any_bad = _and([has_extra, _bin(f"size({bad})", ">", "0")])
+                    out.add(_when(any_bad, structs),
+                            _not(_coalesce(any_bad, "FALSE")))
 
     def _compile_key_pattern(self, out, col_name, col, c: dsl.KeyPattern, m,
                              null_guard):
@@ -871,25 +1145,19 @@ class ConstraintCompiler:
         each emit `additionalProperties` carrying the key
         (processor.js:90-111 + v4validator.js:287)."""
         null_guard = self._row_container_null(out, col_name, col, "additionalProperties", null_guard)
-        def allowed(k):
-            ok = _lit_false()
-            for p in c.patterns:
-                ok = ok | k.rlike(p)
-            return ok
-
-        bad_keys = F.filter(F.map_keys(col), lambda k: ~allowed(k))
-        has_bad = F.size(bad_keys) > 0
+        bad_keys = self._hof(
+            "filter", f"map_keys({col})",
+            lambda k: _not(_or([_bin(k, "RLIKE", _sql_str(p))
+                                for p in c.patterns])))
+        has_bad = _bin(f"size({bad_keys})", ">", "0")
         if null_guard:
-            has_bad = col.isNotNull() & F.coalesce(has_bad, _lit_false())
+            has_bad = _and([_not_null(col), _coalesce(has_bad, "FALSE")])
         msg = m or self._msg("additionalProperties")
-        structs = F.transform(
-            bad_keys,
-            lambda k: _vio_struct("additionalProperties", col_name, k,
-                                  _render_arg(list(c.patterns)), msg))
-        out.fragments.append(
-            F.when(has_bad, structs).otherwise(_empty_violations()))
-        ok = ~has_bad
-        out.valid = ok if out.valid is None else out.valid & ok
+        structs = self._hof(
+            "transform", bad_keys,
+            lambda k: _vio_struct("additionalProperties", _sql_str(col_name), k,
+                                  list(c.patterns), msg))
+        out.add(_when(has_bad, structs), _not(has_bad))
 
     def _compile_struct_closed(self, out, col_name, col, c: dsl.StructClosed,
                                m, null_guard):
@@ -906,23 +1174,20 @@ class ConstraintCompiler:
         (value-validator mode) also skips: there is no static field list
         to check; MapType closedness is KeyPattern/PatternProperties'
         job."""
-        import re as _re
-
         dt = _dtype(self.schema, col_name)
-        pats = [_re.compile(p) for p in c.patterns]
+        pats = [re.compile(p) for p in c.patterns]
         allowed = set(c.allowed)
         msg = m or self._msg("additionalProperties")
         for fname in (f.name for f in dt.fields):
             if fname in allowed or any(p.search(fname) for p in pats):
                 continue
-            failed = col.getField(fname).isNotNull()
+            failed = _not_null(_field(col, fname))
             if null_guard:
-                failed = col.isNotNull() & failed
-            out.fragments.append(_scalar_fragment(
-                failed, "additionalProperties", f"{col_name}.{fname}",
-                F.lit(fname), None, msg))
-            ok = ~failed
-            out.valid = ok if out.valid is None else out.valid & ok
+                failed = _and([_not_null(col), failed])
+            out.add(_scalar_fragment(failed, "additionalProperties",
+                                     f"{col_name}.{fname}", _sql_str(fname),
+                                     None, msg),
+                    _not(failed))
 
     def _expand_element_refs(self, constraints):
         """Inline top-level Ref entries in an items element schema so their
@@ -954,10 +1219,7 @@ class ConstraintCompiler:
         preds = [self._element_predicate(s, elem_type)[0] for s in branch]
 
         def bp(x):
-            ok = _lit_true()
-            for q in preds:
-                ok = ok & F.coalesce(q(x), _lit_false())
-            return ok
+            return _and([_coalesce(q(x), "FALSE") for q in preds])
 
         return bp
 
@@ -968,32 +1230,9 @@ class ConstraintCompiler:
         sub-constraint's own code and column label `<col>[<key>]` — the
         columnar analog of the reference's per-key error path. Entry-value
         predicates reuse the items element machinery (combinators/refs
-        included); null values skip checks, NotNull flags them. All
-        closures are factories — NO default-arg lambdas (the harness would
-        read them as the two-arg (element, index) form)."""
+        included); null values skip checks, NotNull flags them."""
         null_guard = self._row_container_null(out, col_name, col, "additionalProperties", null_guard)
-        entries = F.map_entries(col)
-
-        def bad_factory(regex, pred, is_required):
-            def bad(e):
-                # regex None = the additional-schema path: applies to keys
-                # matching NO pattern
-                matches = e["key"].rlike(regex) if regex is not None else (
-                    ~self._any_key_match(e["key"], c))
-                if is_required:
-                    return matches & e["value"].isNull()
-                return matches & e["value"].isNotNull() & ~F.coalesce(
-                    pred(e["value"]), _lit_false())
-            return bad
-
-        def vio_factory(code, arg, msg):
-            def vio(e):
-                return _vio_struct(
-                    code,
-                    F.concat(F.lit(col_name + "["), e["key"], F.lit("]")),
-                    e["value"], arg, msg)
-            return vio
-
+        entries = f"map_entries({col})"
         mdt = _dtype(self.schema, col_name)
         vtype = mdt.valueType if isinstance(mdt, T.MapType) else None
 
@@ -1002,51 +1241,58 @@ class ConstraintCompiler:
                 pred, code, arg = self._element_predicate(sub, vtype)
                 if getattr(pred, "static_true", False):
                     continue
-                bad = bad_factory(regex, pred, isinstance(sub, dsl.NotNull))
-                offenders = F.filter(entries, bad)
-                has = F.size(offenders) > 0
+
+                def bad(e):
+                    key, value = _field(e, "key"), _field(e, "value")
+                    # regex None = the additional-schema path: applies to
+                    # keys matching NO pattern
+                    matches = (_bin(key, "RLIKE", _sql_str(regex))
+                               if regex is not None
+                               else _not(self._any_key_match(key, c)))
+                    if isinstance(sub, dsl.NotNull):
+                        return _and([matches, _is_null(value)])
+                    return _and([matches, _not_null(value),
+                                 _not(_coalesce(pred(value), "FALSE"))])
+
+                offenders = self._hof("filter", entries, bad)
+                has = _bin(f"size({offenders})", ">", "0")
                 if null_guard:
-                    has = col.isNotNull() & F.coalesce(has, _lit_false())
+                    has = _and([_not_null(col), _coalesce(has, "FALSE")])
                 msg = sub.message or self._msg(code, arg)
-                structs = F.transform(offenders,
-                                      vio_factory(code, arg, msg))
-                out.fragments.append(
-                    F.when(has, structs).otherwise(_empty_violations()))
-                ok = ~has
-                out.valid = ok if out.valid is None else out.valid & ok
+                structs = self._hof(
+                    "transform", offenders,
+                    lambda e: _vio_struct(
+                        code,
+                        f"concat({_sql_str(col_name + '[')}, "
+                        f"{_field(e, 'key')}, ']')",
+                        _field(e, "value"), arg, msg))
+                out.add(_when(has, structs), _not(has))
 
         for regex, subs in c.spec_items():
             emit_value_checks(regex, subs)
 
         if c.additional is False:
-            unmatched = F.filter(
-                entries, lambda e: ~self._any_key_match(e["key"], c))
-            has_bad = F.size(unmatched) > 0
+            unmatched = self._hof(
+                "filter", entries,
+                lambda e: _not(self._any_key_match(_field(e, "key"), c)))
+            has_bad = _bin(f"size({unmatched})", ">", "0")
             if null_guard:
-                has_bad = col.isNotNull() & F.coalesce(has_bad, _lit_false())
+                has_bad = _and([_not_null(col), _coalesce(has_bad, "FALSE")])
             msg = c.message or self._msg("additionalProperties")
-            structs = F.transform(
-                unmatched,
-                lambda e: _vio_struct("additionalProperties", col_name,
-                                      e["key"],
-                                      _render_arg([r for r, _ in
-                                                   c.spec_items()]), msg))
-            out.fragments.append(
-                F.when(has_bad, structs).otherwise(_empty_violations()))
-            ok = ~has_bad
-            out.valid = ok if out.valid is None else out.valid & ok
+            structs = self._hof(
+                "transform", unmatched,
+                lambda e: _vio_struct("additionalProperties",
+                                      _sql_str(col_name), _field(e, "key"),
+                                      [r for r, _ in c.spec_items()], msg))
+            out.add(_when(has_bad, structs), _not(has_bad))
         elif c.additional is not None:
             emit_value_checks(None, list(c.additional))
 
-    def _any_key_match(self, key: Column, c: dsl.PatternProperties) -> Column:
-        ok = _lit_false()
-        for r, _ in c.spec_items():
-            ok = ok | key.rlike(r)
-        for name in c.allowed:
-            # declared `properties` names are never "additional" (draft-4,
-            # v4validator.js:287) — exempt them from the additional policy
-            ok = ok | (key == F.lit(name))
-        return ok
+    def _any_key_match(self, key: str, c: dsl.PatternProperties) -> str:
+        # declared `properties` names are never "additional" (draft-4,
+        # v4validator.js:287) — exempt them from the additional policy
+        return _or([_bin(key, "RLIKE", _sql_str(r)) for r, _ in c.spec_items()]
+                   + [_bin(key, "=", _sql_str(name)) for name in c.allowed])
 
     def _compile_pattern_properties_struct(self, out, col_name, col,
                                            c: dsl.PatternProperties,
@@ -1060,14 +1306,12 @@ class ConstraintCompiler:
         scalar probes — no runtime key scan, same strategy as StructClosed
         (v4validator.js:287, processor.js:90-111). ``additional=False``
         stays StructClosed's job (the translator emits one alongside)."""
-        import re as _re
-
         dt = _dtype(self.schema, col_name)
         allowed = set(c.allowed)
-        pats = [(_re.compile(r), subs) for r, subs in c.spec_items()]
+        pats = [(re.compile(r), subs) for r, subs in c.spec_items()]
         for f_ in dt.fields:
             fname = f_.name
-            fcol = col.getField(fname)
+            fcol = _field(col, fname)
             matched = [subs for p, subs in pats if p.search(fname)]
             if not matched and fname not in allowed:
                 if isinstance(c.additional, (list, tuple)):
@@ -1080,24 +1324,23 @@ class ConstraintCompiler:
                     if getattr(pred, "static_true", False):
                         continue
                     if isinstance(sub, dsl.NotNull):
-                        failed = fcol.isNull()
+                        failed = _is_null(fcol)
                     else:
                         # null field value skips value checks (the engine's
                         # missing/null collapse — a padded-absent property
                         # must not fire)
-                        failed = fcol.isNotNull() & ~F.coalesce(
-                            pred(fcol), _lit_false())
+                        failed = _and([_not_null(fcol),
+                                       _not(_coalesce(pred(fcol), "FALSE"))])
                     if null_guard:
-                        failed = col.isNotNull() & F.coalesce(failed,
-                                                              _lit_false())
+                        failed = _and([_not_null(col), _coalesce(failed, "FALSE")])
                     msg = sub.message or self._msg(code, arg)
-                    out.fragments.append(_scalar_fragment(
-                        failed, code, label, fcol, arg, msg))
-                    ok = ~failed
-                    out.valid = ok if out.valid is None else out.valid & ok
+                    out.add(_scalar_fragment(failed, code, label, fcol, arg, msg),
+                            _not(failed))
 
     def _element_predicate(self, sub: dsl.Constraint, elem_type=None):
-        """Map a scalar constraint onto array elements (lambda-variable form).
+        """Map a scalar constraint onto array elements: returns
+        ``(pred, code, arg)`` where ``pred`` renders the pass test for an
+        element expression (a lambda variable, ``get(arr, i)``, a field).
 
         Combinators nest (the reference's items walk descends into arbitrary
         sub-schemas, processor.js:31-64): the element emits ONE violation
@@ -1108,39 +1351,23 @@ class ConstraintCompiler:
         ``elem_type`` is the element's Spark DataType (from the array/map
         schema): TypeIs folds statically against it, exactly like the
         column-level static DCE (double elements keep the whole-valued
-        runtime probe)."""
+        runtime probe), and numeric/string/array keywords on an element type
+        they do not apply to are static-true (the column-level
+        ``_is_numeric``/``_is_string``/``_is_array`` rule)."""
         if isinstance(sub, dsl.TypeIs):
             return self._element_type_pred(sub, elem_type)
         if isinstance(sub, (dsl.AllOf, dsl.AnyOf, dsl.OneOf)):
-            # NO default args on these closures: F.forall/filter treat a
-            # two-arg callable as the (element, index) form (CLAUDE.md
-            # round-1 gotcha) — branch_preds binds by closure instead
             branch_preds = [self._element_branch_pred(b, elem_type)
                             for b in sub.branches]
             if isinstance(sub, dsl.AllOf):
-                def pred_all(x):
-                    ok = _lit_true()
-                    for bp in branch_preds:
-                        ok = ok & bp(x)
-                    return ok
-                return pred_all, "allOf", None
+                return (lambda x: _and([bp(x) for bp in branch_preds])), "allOf", None
             if isinstance(sub, dsl.AnyOf):
-                def pred_any(x):
-                    ok = _lit_false()
-                    for bp in branch_preds:
-                        ok = ok | bp(x)
-                    return ok
-                return pred_any, "anyOf", None
-
-            def pred_one(x):
-                n = F.lit(0)
-                for bp in branch_preds:
-                    n = n + bp(x).cast("int")
-                return n == F.lit(1)
-            return pred_one, "oneOf", None
+                return (lambda x: _or([bp(x) for bp in branch_preds])), "anyOf", None
+            return (lambda x: _cmp(_sum([_cast(bp(x), "INT") for bp in branch_preds]),
+                                   "=", "1")), "oneOf", None
         if isinstance(sub, dsl.Not):
             bp = self._element_branch_pred(sub.branch, elem_type)
-            return (lambda x: ~bp(x)), "not", None
+            return (lambda x: _not(bp(x))), "not", None
         if isinstance(sub, dsl.Ref):
             # nested (inside a combinator branch) ref: AND of the target —
             # top-level items refs are pre-expanded in _expand_element_refs
@@ -1158,29 +1385,43 @@ class ConstraintCompiler:
             finally:
                 self._ref_stack.discard(sub.name)
             return bp, f"ref.{sub.name}", None
-        if isinstance(sub, dsl.Minimum):
-            return (lambda x: x >= F.lit(sub.value)), "minimum", sub.value
-        if isinstance(sub, dsl.ExclusiveMinimum):
-            return (lambda x: x > F.lit(sub.value)), "minimum.exclusive", sub.value
-        if isinstance(sub, dsl.Maximum):
-            return (lambda x: x <= F.lit(sub.value)), "maximum", sub.value
-        if isinstance(sub, dsl.ExclusiveMaximum):
-            return (lambda x: x < F.lit(sub.value)), "maximum.exclusive", sub.value
-        if isinstance(sub, dsl.MultipleOf):
-            return (lambda x: (x / F.lit(float(sub.value))) % 1.0 == 0.0), "multipleOf", sub.value
         if isinstance(sub, dsl.Enum):
-            return (lambda x: x.isin(list(sub.values))), "enum", list(sub.values)
+            return (lambda x: _in(x, sub.values, elem_type)), "enum", list(sub.values)
         if isinstance(sub, dsl.NotNull):
-            return (lambda x: x.isNotNull()), "required", None
+            return _not_null, "required", None
+
+        def only(applies, pred):
+            return pred if applies else _pass
+
+        num, txt, arr = (_is_numeric(elem_type), _is_string(elem_type),
+                         _is_array(elem_type))
+        if isinstance(sub, dsl.Minimum):
+            return only(num, lambda x: _bin(x, ">=", _lit(sub.value))), "minimum", sub.value
+        if isinstance(sub, dsl.ExclusiveMinimum):
+            return (only(num, lambda x: _bin(x, ">", _lit(sub.value))),
+                    "minimum.exclusive", sub.value)
+        if isinstance(sub, dsl.Maximum):
+            return only(num, lambda x: _bin(x, "<=", _lit(sub.value))), "maximum", sub.value
+        if isinstance(sub, dsl.ExclusiveMaximum):
+            return (only(num, lambda x: _bin(x, "<", _lit(sub.value))),
+                    "maximum.exclusive", sub.value)
+        if isinstance(sub, dsl.MultipleOf):
+            return (only(num, lambda x: _bin(_arith(_arith(x, "/", _lit(float(sub.value))),
+                                            "%", "1.0D"), "=", "0.0D")),
+                    "multipleOf", sub.value)
         if isinstance(sub, dsl.Pattern):
-            return (lambda x: x.rlike(sub.regex)), "pattern", sub.regex
+            return (only(txt, lambda x: _bin(x, "RLIKE", _sql_str(sub.regex))),
+                    "pattern", sub.regex)
         if isinstance(sub, dsl.MinLength):
-            return (lambda x: self._str_len(x) >= sub.value), "minLength", sub.value
+            return (only(txt, lambda x: _bin(self._str_len(x), ">=", _lit(sub.value))),
+                    "minLength", sub.value)
         if isinstance(sub, dsl.MaxLength):
-            return (lambda x: self._str_len(x) <= sub.value), "maxLength", sub.value
+            return (only(txt, lambda x: _bin(self._str_len(x), "<=", _lit(sub.value))),
+                    "maxLength", sub.value)
         if isinstance(sub, dsl.Format):
             spec = get_format(sub.name)
-            return (lambda x: x.rlike(spec.regexp)), f"format.{sub.name}", spec.message
+            return (only(txt, lambda x: _bin(x, "RLIKE", _sql_str(spec.regexp))),
+                    f"format.{sub.name}", spec.message)
         # ---- container constraints ON an element (arbitrary-depth descent,
         # processor.js:31-64 recursion): array<array<…>> and
         # array<struct<…, array<…>>> element schemas. The element emits ONE
@@ -1188,15 +1429,17 @@ class ConstraintCompiler:
         # extraction is a top-level feature (an inner offender would not
         # identify its outer element), same convention as combinators.
         if isinstance(sub, dsl.MinItems):
-            return (lambda x: F.size(x) >= sub.value), "minItems", sub.value
+            return only(arr, lambda x: _bin(f"size({x})", ">=", _lit(sub.value))), "minItems", sub.value
         if isinstance(sub, dsl.MaxItems):
-            return (lambda x: F.size(x) <= sub.value), "maxItems", sub.value
+            return only(arr, lambda x: _bin(f"size({x})", "<=", _lit(sub.value))), "maxItems", sub.value
         if isinstance(sub, dsl.UniqueItems):
-            return (lambda x: F.size(x) == F.size(F.array_distinct(x))), \
-                "uniqueItems", None
-        if isinstance(sub, dsl.Items):
-            return self._nested_items_pred(sub, elem_type), "items", None
-        if isinstance(sub, dsl.TupleItems):
+            return (only(arr, lambda x: _bin(f"size({x})", "=", f"size(array_distinct({x}))")),
+                    "uniqueItems", None)
+        if isinstance(sub, (dsl.Items, dsl.TupleItems)):
+            if not arr:
+                return _pass, "items", None
+            if isinstance(sub, dsl.Items):
+                return self._nested_items_pred(sub, elem_type), "items", None
             return self._nested_tuple_pred(sub, elem_type), "items", None
         raise SuiteCompileError(
             f"{type(sub).__name__} not supported as an items() element constraint"
@@ -1228,26 +1471,14 @@ class ConstraintCompiler:
                         continue
                     fields.append((fname, fp, isinstance(fs, dsl.NotNull)))
 
-        def elem_ok_factory():
-            def elem_ok(y):
-                ok = _lit_true()
-                for q, req in scalar:
-                    ok = ok & (y.isNotNull() if req else
-                               (y.isNull()
-                                | F.coalesce(q(y), _lit_false())))
-                for fname, q, req in fields:
-                    fv = y[fname]
-                    ok = ok & (fv.isNotNull() if req else
-                               (fv.isNull()
-                                | F.coalesce(q(fv), _lit_false())))
-                return ok
-            return elem_ok
+        def elem_ok(y):
+            checks = [(y, q, req) for q, req in scalar]
+            checks += [(_field(y, fname), q, req) for fname, q, req in fields]
+            return _and([_not_null(v) if req else
+                         _or([_is_null(v), _coalesce(q(v), "FALSE")])
+                         for v, q, req in checks])
 
-        elem_ok = elem_ok_factory()
-
-        def pred(x):
-            return F.forall(x, elem_ok)
-        return pred
+        return lambda x: self._hof("forall", x, elem_ok)
 
     def _nested_tuple_pred(self, sub: dsl.TupleItems, elem_type):
         """Predicate form of a positional TupleItems schema on an
@@ -1270,19 +1501,16 @@ class ConstraintCompiler:
         n_spec = len(sub.specs)
 
         def pred(x):
-            ok = _lit_true()
-            for i, q in spec_preds:
-                ok = ok & ((F.size(x) <= i)
-                           | F.coalesce(q(F.get(x, i)), _lit_false()))
+            parts = [_or([_bin(f"size({x})", "<=", str(i)),
+                          _coalesce(q(f"get({x}, {i})"), "FALSE")])
+                     for i, q in spec_preds]
             if sub.additional is False or sub.additional == ():
-                ok = ok & (F.size(x) <= n_spec)
+                parts.append(_bin(f"size({x})", "<=", str(n_spec)))
+            extras = f"slice({x}, {n_spec + 1}, greatest(size({x}) - {n_spec}, 0))"
             for q in addl_preds:
-                extras = F.slice(x, n_spec + 1,
-                                 F.greatest(F.size(x) - n_spec, F.lit(0)))
-                ok = ok & F.forall(
-                    extras,
-                    lambda e: F.coalesce(q(e), _lit_false()))
-            return ok
+                parts.append(self._hof("forall", extras,
+                                       lambda e: _coalesce(q(e), "FALSE")))
+            return _and(parts)
         return pred
 
     def _element_type_pred(self, sub: dsl.TypeIs, elem_type):
@@ -1295,16 +1523,16 @@ class ConstraintCompiler:
         column to attach each tried type to)."""
         types = sub.type if isinstance(sub.type, (list, tuple)) else [sub.type]
 
-        def member_factory(tname):
+        def member(tname):
             if tname == "null":
-                return lambda x: x.isNull()
+                return _is_null
             if elem_type is None:
                 raise SuiteCompileError(
                     f"TypeIs('{tname}') as an element constraint needs a "
                     f"typed schema (compile with df.schema)")
             if tname == "integer" and isinstance(
                     elem_type, (T.FloatType, T.DoubleType, T.DecimalType)):
-                return lambda x: (x % F.lit(1.0)) == 0.0
+                return lambda x: _bin(_arith(x, "%", "1.0D"), "=", "0.0D")
             static = {
                 "string": isinstance(elem_type, T.StringType),
                 "integer": isinstance(
@@ -1322,20 +1550,17 @@ class ConstraintCompiler:
             # (draft-4: null only matches "null"). Where the caller's null
             # convention skips nulls (items/fields/map values) the guard
             # hides this; where positions are null-strict (TupleItems) it
-            # must fail — a bare F.lit(static) made the verdict depend on
-            # the element's physical dtype (round-4 review finding).
+            # must fail — a bare constant made the verdict depend on the
+            # element's physical dtype (round-4 review finding).
             def const(x):
-                return x.isNotNull() & F.lit(static)
+                return _and([_not_null(x), _lit(static)])
             const.static_value = static
             return const
 
-        members = [member_factory(t) for t in types]
+        members = [member(t) for t in types]
 
         def pred(x):
-            ok = _lit_false()
-            for mp in members:
-                ok = ok | mp(x)
-            return ok
+            return _or([mp(x) for mp in members])
 
         # static DCE: if any member folds to a constant TRUE, the check can
         # never fail — mark it so the items compilers emit NOTHING (a
@@ -1350,30 +1575,31 @@ class ConstraintCompiler:
     # -- custom ---------------------------------------------------------------
 
     def _compile_conform(self, out, col_name, col, c: dsl.Conform, m, null_guard):
+        """The Column boundary: the user's predicate is built through the
+        DataFrame API over ``F.expr`` of the column reference."""
         if (c.expr is None) == (c.pandas_fn is None):
             raise SuiteCompileError("Conform needs exactly one of expr / pandas_fn")
         extra = [F.col(x) for x in c.extra_cols]
+        colc = _column(col)
         if c.expr is not None:
-            pred = c.expr(col, *extra) if c.extra_cols else c.expr(col)
+            pred = c.expr(colc, *extra) if c.extra_cols else c.expr(colc)
         else:
             udf = F.pandas_udf(c.pandas_fn, T.BooleanType())
-            pred = udf(col, *extra)
+            pred = udf(colc, *extra)
         code = c.code
-        failed = ~F.coalesce(pred, _lit_false())
+        failed = _not(_coalesce(pred, "FALSE"))
         if null_guard:
             # column-level conform skips absent (null) values like every
             # other non-required check; row-level conform (null_guard=False)
             # sees raw values — the reference's custom fns decide themselves
-            failed = col.isNotNull() & failed
+            failed = _and([_not_null(col), failed])
         msg = m or (self._msg("custom") if code == "custom" else
                     render_message(code, self._msg("custom"),
                                    overrides=self.suite.messages,
                                    gettext=getattr(self.suite, "gettext",
                                                    None)))
-        out.fragments.append(
-            _scalar_fragment(failed, code, col_name, col, None, msg)
-        )
-        out.valid = ~failed
+        out.add(_scalar_fragment(failed, code, col_name, col, None, msg),
+                _not(failed))
 
     # -- combinators ------------------------------------------------------------
 
@@ -1382,112 +1608,66 @@ class ConstraintCompiler:
         (compiler.js:53-70): a branch is an independent list of fragments +
         a validity predicate."""
         cc = self._compile_column(col_name, list(constraints))
-        if cc.valid is None:
-            cc.valid = _lit_true()
+        if not cc.valids:
+            cc.valid = "TRUE"
         return cc
 
-    def _compile_combinator(self, out, col_name, col, c, m, null_guard):
+    def _compile_combinator(self, out, col_name, col, c, m):
         branches = [self._compile_branch(col_name, b) for b in c.branches]
-        valids = [F.coalesce(b.valid, _lit_false()) for b in branches]
-        sub_errs = [
-            _concat_all([f for f in b.fragments]) if b.fragments else _empty_violations()
-            for b in branches
-        ]
+        valids = [_coalesce(b.valid, "FALSE") for b in branches]
+        sub_errs = [_concat(b.fragments) for b in branches]
+        label = _sql_str(col_name)
 
         if isinstance(c, dsl.AllOf):
             # each failing branch: one 'allOf' error + its sub-errors
             # (v4validator.js:127-137)
-            msg = m or self._msg("allOf")
-            frags = []
-            for v, errs in zip(valids, sub_errs):
-                head = F.array(_vio_struct("allOf", col_name, col, None, msg))
-                frags.append(
-                    F.when(~v, F.concat(head, errs)).otherwise(_empty_violations())
-                )
-            out.fragments.append(_concat_all(frags))
-            allv = _and_all(valids)
-            out.valid = allv
+            head = _array(_vio_struct("allOf", label, col, None,
+                                      m or self._msg("allOf")))
+            out.add(_concat([_when(_not(v), _concat([head, errs]))
+                             for v, errs in zip(valids, sub_errs)]),
+                    _and(valids))
 
         elif isinstance(c, dsl.AnyOf):
-            any_ok = _or_all(valids)
-            msg = m or self._msg("anyOf")
-            head = F.array(_vio_struct("anyOf", col_name, col, None, msg))
-            all_errs = _concat_all(sub_errs)
-            out.fragments.append(
-                F.when(~any_ok, F.concat(head, all_errs)).otherwise(_empty_violations())
-            )
-            out.valid = any_ok
+            any_ok = _or(valids)
+            head = _array(_vio_struct("anyOf", label, col, None,
+                                      m or self._msg("anyOf")))
+            out.add(_when(_not(any_ok), _concat([head, *sub_errs])), any_ok)
 
         elif isinstance(c, dsl.OneOf):
-            count = None
-            for v in valids:
-                t = v.cast("int")
-                count = t if count is None else count + t
-            zero_msg = m or self._msg("oneOf.zero")
-            many_msg = m or self._msg("oneOf")
-            all_errs = _concat_all(sub_errs)
-            frag = (
-                F.when(count == 0,
-                       F.concat(F.array(_vio_struct("oneOf.zero", col_name, col, None, zero_msg)),
-                                all_errs))
-                .when(count > 1, F.array(_vio_struct("oneOf", col_name, col, None, many_msg)))
-                .otherwise(_empty_violations())
-            )
-            out.fragments.append(frag)
-            out.valid = count == 1
+            count = _sum([_cast(v, "INT") for v in valids])
+            zero = _array(_vio_struct("oneOf.zero", label, col, None,
+                                      m or self._msg("oneOf.zero")))
+            many = _array(_vio_struct("oneOf", label, col, None,
+                                      m or self._msg("oneOf")))
+            out.add(_case([(_cmp(count, "=", "0"), _concat([zero, *sub_errs])),
+                           (_cmp(count, ">", "1"), many)]),
+                    _cmp(count, "=", "1"))
 
     def _compile_dependency(self, out, col_name, c: dsl.Dependency, m):
         """If `on` is present (non-null — the columnar analog of
         hasOwnProperty, v4validator.js:104-123): dependent requirements must
         hold; failure → 'dependency' error (arg = original spec) + sub-errors."""
-        on = F.col(c.on)
-        sub_frags: list[Column] = []
-        sub_valids: list[Column] = []
+        on = _ident(c.on)
+        sub_frags: list = []
+        sub_valids: list = []
         if c.requires:
             for req in c.requires:
                 b = self._compile_column(req, [dsl.NotNull()])
                 sub_frags.extend(b.fragments)
-                sub_valids.append(F.coalesce(b.valid, _lit_false()))
+                sub_valids.append(_coalesce(b.valid, "FALSE"))
             arg = list(c.requires)
         else:
             for target_col, constraint in c.constraints:
-                b = self._compile_one(target_col, F.col(target_col), constraint, null_guard=True)
+                b = self._compile_one(target_col, _ident(target_col), constraint,
+                                      null_guard=True)
                 sub_frags.extend(b.fragments)
-                if b.valid is not None:
-                    sub_valids.append(F.coalesce(b.valid, _lit_false()))
+                if b.valids:
+                    sub_valids.append(_coalesce(b.valid, "FALSE"))
             arg = f"schema({c.on})"
-        dep_valid = _and_all(sub_valids)
-        triggered = on.isNotNull()
-        failed = triggered & ~dep_valid
+        failed = _and([_not_null(on), _not(_and(sub_valids))])
         msg = m or self._msg("dependency", arg)
-        head = F.array(_vio_struct("dependency", col_name, on, arg, msg))
-        errs = _concat_all(sub_frags) if sub_frags else _empty_violations()
-        out.fragments.append(
-            F.when(failed, F.concat(head, errs)).otherwise(_empty_violations())
-        )
-        out.valid = ~failed
-
-
-def _and_all(cols: list[Column]) -> Column:
-    out = _lit_true()
-    for c in cols:
-        out = out & c
-    return out
-
-
-def _or_all(cols: list[Column]) -> Column:
-    out = _lit_false()
-    for c in cols:
-        out = out | c
-    return out
-
-
-def _concat_all(frags: list[Column]) -> Column:
-    if not frags:
-        return _empty_violations()
-    if len(frags) == 1:
-        return frags[0]
-    return F.concat(*frags)
+        head = _array(_vio_struct("dependency", _sql_str(col_name), on, arg, msg))
+        out.add(_when(failed, _concat([head, *sub_frags])), _not(failed))
 
 
 def compile_suite(suite: dsl.Suite, schema: Optional[T.StructType] = None) -> ValidationPlan:

@@ -69,7 +69,7 @@ class TypeIs(Constraint):
 @dataclass(frozen=True)
 class Enum(Constraint):
     """``enum: [...]`` — precompiled set membership, v4validator.js:181-190.
-    Small sets fold into ``Column.isin`` literals; large sets should use the
+    Small sets fold into an SQL ``IN`` literal list; large sets should use the
     referential broadcast-join check instead (operators/aggregates.py)."""
 
     values: Sequence = ()

@@ -409,12 +409,14 @@ def run_official_tests(spark: SparkSession, tests: list[OfficialTest],
     # Round-6 sequencing note: a thread pool here FIRST measured useless
     # (per-batch latency inflated ~8x, total unchanged) because the build
     # was GIL-bound — per-API-call Python overhead (debug call-site
-    # capture, uncached constant Columns) dominated. After the compiler's
+    # capture, uncached constant Columns) dominated. After a compiler
     # constant-Column cache and dataFrameDebugging=false cut the work to
     # ~49k py4j round trips, the cost became pure JVM-socket WAIT, which
     # threads overlap fine: 21.3 s -> 8.4 s, byte-identical ordered
     # results (pool.map preserves group order; each group appends to its
     # own result). Optimize per-call cost BEFORE reaching for threads.
+    # The compiler has since moved to SQL text (no py4j call per node);
+    # the pool now overlaps each batch's parse, analysis and collect.
     groups = ([planned[i:i + batch_size]
                for i in range(0, len(planned), batch_size)]
               + [[tp] for tp in solo])

@@ -52,7 +52,7 @@ class ValidationResult:
         filter-pushdown pathology, BENCH.md round 2: 77 s vs 7 s at 16M
         rows / 32 cores)."""
         idc = self.id_column
-        v = self.plan.explode_violations(self.validated.drop(VIOLATIONS_COL))
+        v = self.plan.explode_violations(self.validated)
         out = v.select(
             idc,
             "__v.constraint_id",
